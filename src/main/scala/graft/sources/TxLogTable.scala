@@ -8,11 +8,11 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.v2bridge
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
-import graft.operators.Upsert
 import graft.sources.DataSkipping.{ColRange, FileStats}
 import graft.sources.TxStore.RichPath
 
@@ -162,6 +162,33 @@ object TxLogTable {
     */
   @volatile private[graft] var lastDmlRewritten: Int = -1
 
+  /** The change-type column of every CDC dir. */
+  private[sources] val ChangeType = "_change_type"
+
+  /** One leg of a routed write: where `when` holds, a row tagged
+    * `changeType` (a null literal for the data leg) with `values`
+    * overriding columns of the input row.
+    */
+  private[sources] final case class Leg(when: Column, changeType: Column,
+      values: Map[String, Column] = Map.empty)
+
+  /** What one commit staged and where its time went: part-files, rows
+    * and on-disk bytes summed from the writers' commit messages (data
+    * and change files alike), then the nanoseconds spent in the staging
+    * writes, in folding the writers' per-file stats into the manifest's
+    * keying, and in the manifest publish (every bid, won or lost).
+    */
+  final case class CommitMetrics(version: Long, action: String,
+      files: Int, rows: Long, bytes: Long, writeNanos: Long,
+      statsMergeNanos: Long, publishNanos: Long)
+
+  @volatile private var lastMetrics: Option[CommitMetrics] = None
+
+  /** Metrics of the most recent commit in this JVM. Only the last one
+    * is kept, so memory stays bounded however many commits run.
+    */
+  def lastCommitMetrics: Option[CommitMetrics] = lastMetrics
+
   /** JVM-wide parsed-manifest cache. A published version file is
     * IMMUTABLE within one table lifetime — the commit protocol only
     * ever creates new versions, never rewrites one — so
@@ -284,7 +311,7 @@ object TxLogTable {
     * MERGE INTO contract). Conditions are SQL strings over the aliases
     * `t` (target snapshot row) and `s` (source row); `None` = always.
     */
-  sealed trait MergeClause
+  sealed trait MergeClause { def condition: Option[String] }
   /** Replace the target row with the source row's target-schema
     * projection when `condition` holds.
     */
@@ -511,7 +538,7 @@ final class TxLogTable(spark: SparkSession,
         val schema = manifestChainAt(v)._2
         val df = spark.read.format(format).options(options)
           .schema(schema).load(fresh: _*)
-        val staged = stageData(df, checkConstraints = true)
+        val staged = stage(df, checkConstraints = true).dir
         Some(Manifest(0L, "append", Seq(staged), schema.json,
           System.currentTimeMillis(),
           markers = Some(Map("copy_into" -> fresh.size.toString)),
@@ -626,9 +653,10 @@ final class TxLogTable(spark: SparkSession,
     * constraints are live.
     */
   private def enforce(df: DataFrame,
-      constraints: Map[String, String]): DataFrame = {
+      constraints: Map[String, String],
+      exemptChanges: Boolean = false): DataFrame = {
     if (constraints.isEmpty) return df
-    import org.apache.spark.sql.functions.{assert_true, coalesce => sqlCoalesce, expr, lit}
+    import org.apache.spark.sql.functions.{assert_true, coalesce => sqlCoalesce, col, expr, lit}
     // an evolved batch may legally OMIT columns a constraint references
     // (they land as null, and SQL CHECK passes on NULL) — null-pad them
     // so the expression resolves instead of failing analysis
@@ -638,8 +666,13 @@ final class TxLogTable(spark: SparkSession,
       df.columns.exists(_.equalsIgnoreCase(c)))
     val base = missing.foldLeft(df)((d, c) => d.withColumn(c, lit(null)))
     val checked = constraints.foldLeft(base) { case (d, (name, sql)) =>
+      val ok = sqlCoalesce(expr(sql), lit(true))
+      // a routed write's change rows are not data: only its
+      // null-tagged rows must pass
       d.withColumn(s"__check_$name",
-        assert_true(sqlCoalesce(expr(sql), lit(true)),
+        assert_true(
+          if (exemptChanges) ok || col(TxLogTable.ChangeType).isNotNull
+          else ok,
           lit(s"CHECK constraint '$name' violated: $sql")))
     }
     // the filter keeps every row (assert_true yields NULL on pass) and
@@ -1900,22 +1933,22 @@ final class TxLogTable(spark: SparkSession,
     store.deleteRecursive(dataDir.resolve(name))
 
   /** Commit a dir the V2 writers already staged (the driver half of
-    * [[TxLogBatchWrite]]): same optimistic loop and commit shape as
-    * [[append]]/[[overwrite]]. CHECK constraints were enforced
-    * IN-TASK by the writers (fail-fast per row, single pass — the
-    * point the V1 staging job enforces at); the commit re-validates
-    * with one batch-sized read only when the live set MOVED since the
-    * writers bound theirs (a concurrent addConstraint — the same race
-    * guard [[append]] has). Stats collect off the staged dir exactly
-    * as the V1 path's do.
+    * [[TxLogBatchWrite]] and [[TxLogStreamingWrite]]): same optimistic
+    * loop and commit shape as [[append]]/[[overwrite]]. CHECK
+    * constraints were enforced IN-TASK by the writers (fail-fast per
+    * row, single pass); the commit re-validates with one batch-sized
+    * read only when the live set MOVED since the writers bound theirs
+    * (a concurrent addConstraint — the same race guard [[append]]
+    * has). The per-file stats are the ones the writers folded while
+    * writing, carried by their commit messages `done` — no re-scan.
     */
   private[sources] def commitStagedV2(dirName: String,
       batchSchema: StructType, overwrite: Boolean,
-      statsCols: Seq[String], bloomCols: Seq[String],
+      done: Seq[TxLogWriteDone], writeNanos: Long,
       validatedConstraints: Map[String, String] = Map.empty,
       maxRetries: Int = 20,
       markers: Map[String, String] = Map.empty): Long = {
-    val stats = statsOpt(dirName, batchSchema, statsCols, bloomCols)
+    val stats = sealStaged(dirName, None, done, writeNanos)
     commitLoop(maxRetries) { v =>
       val cs = constraintsAt(v)
       if (cs.nonEmpty && cs != validatedConstraints)
@@ -1994,21 +2027,42 @@ final class TxLogTable(spark: SparkSession,
 
   // ── write path ────────────────────────────────────────────────────
 
-  /** Write `df` as a fresh immutable data dir; returns its name. The
-    * dir is INERT until a manifest references it — a crash here leaks
-    * an orphan for [[vacuum]], never a half-visible table state.
+  /** What one staged write produced: the data dir, a routed write's
+    * change dir, and the per-file stats the writers folded (None when
+    * the write asked for no stats columns).
     */
-  private[sources] def stageData(df: DataFrame,
-      sortCols: Seq[String] = Nil,
+  private[sources] final case class Staged(dir: String,
+      cdcDir: Option[String], stats: Option[Map[String, FileStats]])
+
+  /** The one staged write every commit runs: ONE native DSv2 write
+    * ([[TxLogStageTable]] over the shared [[TxLogDataWriterFactory]])
+    * that writes the part-files and folds each file's skipping stats
+    * for `statsCols`/`bloomCols` while writing — no re-scan of the
+    * staged dir. With `routed`, `df`'s last column is `_change_type`
+    * and the writers split the rows by it: null rows are the commit's
+    * data, tagged rows its change feed, so a DML commit writes both
+    * dirs from the same pass. The dirs are INERT until a manifest
+    * references them — a crash here leaks an orphan for [[vacuum]],
+    * never a half-visible table state.
+    */
+  private[sources] def stage(df: DataFrame, sortCols: Seq[String] = Nil,
       cmapOverride: Option[Map[String, String]] = None,
-      checkConstraints: Boolean = false): String = {
+      checkConstraints: Boolean = false,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      routed: Boolean = false): Staged = {
+    val t0 = System.nanoTime()
     val name = UUID.randomUUID().toString
+    val cdcName = if (routed) Some(UUID.randomUUID().toString) else None
+    require(!routed || df.columns.last == TxLogTable.ChangeType,
+      s"a routed write carries ${TxLogTable.ChangeType} as its last column")
     // CHECK constraints ride inside this same write job (fail-fast per
-    // row, no second pass). Only DATA-changing public writers opt in —
-    // CDC/DV/compaction stages carry rows already validated (or
-    // metadata rows a later, stricter constraint must not veto).
+    // row, no second pass), on the DATA rows only. Only data-changing
+    // public writers opt in — CDC/DV/compaction stages carry rows
+    // already validated (or metadata rows a later, stricter constraint
+    // must not veto).
     val input =
-      if (checkConstraints) enforce(df, constraintsAt(currentVersion))
+      if (checkConstraints)
+        enforce(df, constraintsAt(currentVersion), exemptChanges = routed)
       else df
     val sorted =
       if (sortCols.isEmpty) input
@@ -2022,169 +2076,102 @@ final class TxLogTable(spark: SparkSession,
       if (cmap.isEmpty) sorted
       else sorted.select(sorted.columns.map(c =>
         sorted.col(c).as(cmap.getOrElse(c, c))).toIndexedSeq: _*)
-    out.write.parquet(dataDir.resolve(name).toString)
-    name
-  }
-
-  /** Stage the full CDC row set of a keyed write: classify by key
-    * presence between the pre-commit snapshot and the staged result,
-    * restricted to `touched` keys PLUS any duplicate-key groups of the
-    * target (a latest-wins merge collapses those even when the batch
-    * never names them — without this the feed would silently miss the
-    * collapse). Emits Delta-CDF-style `_change_type` rows:
-    * `insert` / `update_preimage` / `update_postimage` / `delete`.
-    *
-    * A matched key whose row survives unchanged (conditional-merge
-    * keep arm, or a latest-wins merge the target won) emits a no-op
-    * pre/post pair — pre = post, so it cancels in any additive fold
-    * (the incremental-view contract); exact change-row suppression
-    * would cost a full-row comparison for no consumer benefit.
-    *
-    * Null-keyed rows never key-match, so they are invisible to the
-    * typed feed (the same rule the merge join itself applies).
-    * Cost: semi-joins against frames the commit already materialized —
-    * batch-proportional, plus one duplicate-key aggregate on the
-    * snapshot the merge is reading anyway.
-    */
-  private def stageCdc(target: DataFrame, newDf: DataFrame,
-      touched: DataFrame, key: Seq[String]): String = {
-    import org.apache.spark.sql.functions._
-    val dupKeys = target.groupBy(key.map(target.col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .select(key.map(col): _*)
-    // materialize the three bounded frames each consumed by TWO
-    // branches of the classification DAG below: without it the single
-    // CDC write job recomputes the keys subtree (touched ∪ dup census)
-    // four times and re-scans the touched files / staged batch once
-    // per branch (guide §5 localCheckpoint: cut a reused subtree).
-    // All three are delta-sized — keys ≤ touched keys, oldT/newT ≤
-    // touched rows — the same bound the CDC dir itself carries.
-    // LAZY (r17 verdict: the three eager jobs cost q118 ~15% at bench
-    // scale): the CDC write below is the only consumer, so the frames
-    // materialize inside that one job — persisted blocks still dedupe
-    // the two branches of each — without three extra job launches.
-    val keys = touched.unionByName(dupKeys).distinct()
-      .localCheckpoint(eager = false)
-    val oldT = target.join(keys, key, "left_semi")
-      .localCheckpoint(eager = false)
-    val newT = newDf.join(keys, key, "left_semi")
-      .localCheckpoint(eager = false)
-    val oldKeys = oldT.select(key.map(oldT.col): _*).distinct()
-    val newKeys = newT.select(key.map(newT.col): _*).distinct()
-    // one pass per side: a left join against the OTHER side's key set
-    // (batch-proportional; AQE broadcasts it when small) classifies
-    // each row — old rows split delete / update_preimage, new rows
-    // split insert / update_postimage
-    val mark = "__other_side"
-    val cdc = oldT
-        .join(newKeys.withColumn(mark, lit(true)), key, "left")
-        .withColumn("_change_type",
-          when(col(mark).isNull, "delete").otherwise("update_preimage"))
-        .drop(mark)
-      .unionByName(newT
-        .join(oldKeys.withColumn(mark, lit(true)), key, "left")
-        .withColumn("_change_type",
-          when(col(mark).isNull, "insert").otherwise("update_postimage"))
-        .drop(mark))
-    stageData(cdc)
-  }
-
-  /** Per-file min/max/null-count ranges for `statsCols` over a staged
-    * dir — one column-pruned scan of ONLY the stats columns (parquet
-    * reads nothing else), grouped by file. The collect is bounded at
-    * one row per part-file of the staged batch. Unsupported column
-    * types are silently skipped (no stats ⇒ never pruned).
-    */
-  private def collectStats(dirName: String, schema: StructType,
-      statsCols: Seq[String], bloomCols: Seq[String] = Nil,
-      bloomExpectedItems: Long = 100000L,
-      bloomFpp: Double = 0.01): Map[String, FileStats] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graft.bridge
-    import org.apache.spark.sql.types.{LongType => SLong}
-    val valid = statsCols.filter(c =>
-      schema.fieldNames.contains(c) && DataSkipping.supported(schema(c).dataType))
-    val validBloom = bloomCols.filter(c => schema.fieldNames.contains(c) &&
-      DataSkipping.bloomSupported(schema(c).dataType))
-    if (valid.isEmpty && validBloom.isEmpty) return Map.empty
-    val numBits = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(bloomExpectedItems, bloomFpp)
-    val aggs = Seq(count(lit(1L)).as("__rows")) ++
-      valid.flatMap(c => Seq(
-        min(col(c)).as(s"__min__$c"),
-        max(col(c)).as(s"__max__$c"),
-        count(col(c)).as(s"__nn__$c"))) ++
-      validBloom.map { c =>
-        // canonical hash form (DataSkipping.bloomHash's contract):
-        // integrals as LONG, strings raw
-        val canon = schema(c).dataType match {
-          case _: org.apache.spark.sql.types.StringType => col(c)
-          case _ => col(c).cast(SLong)
-        }
-        bridge.column(new BloomFilterAggregate(
-          bridge.expression(xxhash64(canon)),
-          Literal(bloomExpectedItems), Literal(numBits))
-          .toAggregateExpression()).as(s"__bloom__$c")
-      } ++
-      // per-file NDV sketch (same single pass): distinct values fed as
-      // canonical strings (injective per distinct value, so the sketch
-      // estimates the column's true NDV); unions across files in
-      // statsSummaryAt recover the TABLE NDV the CBO needs. lgK=9 →
-      // ≤4 KB compact sketch per column per file, ~4% RSE.
-      valid.map { c =>
-        bridge.column(graft.plans.ThetaSketchAgg(
-          bridge.expression(col(c).cast("string")), lgK = 9)
-          .toAggregateExpression()).as(s"__theta__$c")
-      }
-    val rows = spark.read.schema(schema)
-      .parquet(dataDir.resolve(dirName).toString)
-      .select(((valid ++ validBloom).distinct.map(col) :+
-        input_file_name().as("__file")): _*)
-      .groupBy(col("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    rows.map { r =>
-      val uri = r.getString(0)
-      val fname = new Path(uri).getName
-      val total = r.getLong(1)
-      val cols = valid.zipWithIndex.map { case (c, i) =>
-        val base = 2 + i * 3
-        c -> ColRange(
-          DataSkipping.encodeExternal(r.get(base)),
-          DataSkipping.encodeExternal(r.get(base + 1)),
-          total - r.getLong(base + 2))
-      }.toMap
-      val bloomBase = 2 + valid.length * 3
-      val blooms = validBloom.zipWithIndex.flatMap { case (c, i) =>
-        Option(r.get(bloomBase + i)).map(b => c ->
-          java.util.Base64.getEncoder.encodeToString(
-            b.asInstanceOf[Array[Byte]]))
-      }.toMap
-      val thetaBase = bloomBase + validBloom.length
-      val thetas = valid.zipWithIndex.flatMap { case (c, i) =>
-        Option(r.get(thetaBase + i)).map(b => c ->
-          java.util.Base64.getEncoder.encodeToString(
-            b.asInstanceOf[Array[Byte]]))
-      }.toMap
-      s"$dirName/$fname" -> FileStats(total, cols, blooms, thetas)
-    }.toMap
-  }
-
-  private def statsOpt(dirName: String, schema: StructType,
-      statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil): Option[Map[String, FileStats]] =
-    if (statsCols.isEmpty && bloomCols.isEmpty) None
-    else {
-      // staged files store PHYSICAL names; stats are keyed by them too
-      // (scanPathsAt consults them under the physical filter rewrite)
-      val cmap = currentColMap
-      val m = collectStats(dirName, physSchema(schema, cmap),
-        statsCols.map(c => cmap.getOrElse(c, c)),
-        bloomCols.map(c => cmap.getOrElse(c, c)))
-      if (m.isEmpty) None else Some(m)
+    val outSchema = TxLogV2.asNullable(out.schema)
+    val dataSchema =
+      if (routed) StructType(outSchema.fields.init) else outSchema
+    (name +: cdcName.toSeq).foreach(mkStagedDir)
+    val sink = new TxLogStageTable(outSchema, TxLogDataWriterFactory(
+      stagedDirPath(name), v2bridge.stagedParquetWriters(spark, dataSchema),
+      stats = statsSpec(dataSchema, statsCols, bloomCols, cmap),
+      cdc = cdcName.map(c => (stagedDirPath(c),
+        v2bridge.stagedParquetWriters(spark, outSchema)))))
+    try v2bridge.appendByPosition(out, sink)
+    catch { case NonFatal(e) =>
+      (name +: cdcName.toSeq).foreach(dropStagedDir)
+      throw e
     }
+    Staged(name, cdcName,
+      sealStaged(name, cdcName, sink.messages, System.nanoTime() - t0))
+  }
+
+  /** The writers' stats spec over a PHYSICAL write layout, for stats
+    * and Bloom columns named logically.
+    */
+  private def statsSpec(physical: StructType, statsCols: Seq[String],
+      bloomCols: Seq[String], cmap: Map[String, String]): TxLogStatsSpec =
+    TxLogStatsSpec.of(physical, statsCols.map(c => cmap.getOrElse(c, c)),
+      bloomCols.map(c => cmap.getOrElse(c, c)),
+      spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** [[statsSpec]] for a batch arriving under logical names at the
+    * current mapping — the native V2 writers' layout.
+    */
+  private[sources] def writeStatsSpec(logical: StructType,
+      statsCols: Seq[String], bloomCols: Seq[String]): TxLogStatsSpec =
+    statsSpec(physicalWriteSchema(logical), statsCols, bloomCols,
+      currentColMap)
+
+  /** Seal a staged write from its writers' commit messages: delete any
+    * part-file no message names (an attempt that published and then
+    * failed — only the attempt the commit coordinator let finish is
+    * live), key the per-file stats as "dir/part-file", and add the
+    * output to the pending commit metrics.
+    */
+  private[sources] def sealStaged(dir: String, cdcDir: Option[String],
+      done: Seq[TxLogWriteDone],
+      writeNanos: Long): Option[Map[String, FileStats]] = {
+    val t0 = System.nanoTime()
+    val files = done.flatMap(_.files)
+    val changes = done.flatMap(_.cdcFiles)
+    def sweep(d: String, keep: Set[String]): Unit =
+      store.list(dataDir.resolve(d))
+        .filter(n => n.endsWith(".parquet") && !keep(n))
+        .foreach(n => store.deleteIfExists(dataDir.resolve(d).resolve(n)))
+    sweep(dir, files.map(_.name).toSet)
+    cdcDir.foreach(sweep(_, changes.map(_.name).toSet))
+    val stats = files.flatMap(f => f.stats.map(s"$dir/${f.name}" -> _)).toMap
+    pending.synchronized {
+      val all = files ++ changes
+      pending.files += all.size
+      pending.rows += all.map(_.rows).sum
+      pending.bytes += all.map(_.bytes).sum
+      pending.writeNanos += writeNanos
+      pending.statsMergeNanos += System.nanoTime() - t0
+    }
+    if (stats.isEmpty) None else Some(stats)
+  }
+
+  /** Commit metrics accumulated since the last commit landed. */
+  private object pending {
+    var files = 0; var rows = 0L; var bytes = 0L
+    var writeNanos = 0L; var statsMergeNanos = 0L; var publishNanos = 0L
+    def reset(): Unit = {
+      files = 0; rows = 0L; bytes = 0L
+      writeNanos = 0L; statsMergeNanos = 0L; publishNanos = 0L
+    }
+  }
+
+  /** Fan each row of `df` out into the legs of one ROUTED write (see
+    * [[stage]]): leg i emits a row where `legs(i).when` holds, tagged
+    * `legs(i).changeType` (null for the data leg) and with the
+    * `legs(i).values` overrides applied to `cols`. One Generate over
+    * the single pass — no union, so the input is computed once.
+    */
+  private def fanOut(df: DataFrame, cols: Seq[String],
+      legs: Seq[TxLogTable.Leg]): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val leg = col("__leg")
+    val picked = df.withColumn("__leg", explode(filter(
+      array(legs.zipWithIndex.map { case (l, i) => when(l.when, lit(i)) }: _*),
+      _.isNotNull)))
+    def pick(of: TxLogTable.Leg => Option[Column], dflt: Column): Column =
+      legs.zipWithIndex.foldLeft(dflt) { case (acc, (l, i)) =>
+        of(l).fold(acc)(v => when(leg === i, v).otherwise(acc))
+      }
+    picked.select(cols.map(c => pick(_.values.get(c), col(c)).as(c)) :+
+      pick(l => Some(l.changeType), lit(null).cast("string"))
+        .as(TxLogTable.ChangeType): _*)
+  }
 
   /** The atomic publish, delegated to the [[CommitOwner]] seam: the
     * whole concurrency story reduces to put-if-absent with exactly one
@@ -2214,6 +2201,11 @@ final class TxLogTable(spark: SparkSession,
       schemaJson, System.currentTimeMillis()))
 
   private def commitLoop(maxRetries: Int)(
+      attempt: Long => Option[Manifest]): Long =
+    try commitAttempts(maxRetries)(attempt)
+    finally pending.synchronized(pending.reset())
+
+  private def commitAttempts(maxRetries: Int)(
       attempt: Long => Option[Manifest]): Long = {
     var tries = 0
     while (tries <= maxRetries) {
@@ -2244,7 +2236,16 @@ final class TxLogTable(spark: SparkSession,
               case dc if dc.isEmpty => withCs
               case dc => withCs.copy(droppedCols = Some(dc.toSeq.sorted))
             }
-          if (tryCommit(next, stamped)) return next
+          val t0 = System.nanoTime()
+          val won = tryCommit(next, stamped)
+          pending.synchronized {
+            pending.publishNanos += System.nanoTime() - t0
+            if (won) TxLogTable.lastMetrics = Some(TxLogTable.CommitMetrics(
+              next, stamped.action, pending.files, pending.rows,
+              pending.bytes, pending.writeNanos, pending.statsMergeNanos,
+              pending.publishNanos))
+          }
+          if (won) return next
       }
       tries += 1
     }
@@ -2314,8 +2315,8 @@ final class TxLogTable(spark: SparkSession,
         colMapAt(v0), droppedColsAt(v0).toSeq)
     }
     val cs0 = constraintsAt(currentVersion)
-    val staged = stageData(df, sortCols, checkConstraints = true)
-    val stats = statsOpt(staged, df.schema, statsCols, bloomCols)
+    val Staged(staged, _, stats) = stage(df, sortCols,
+      checkConstraints = true, statsCols = statsCols, bloomCols = bloomCols)
     commitLoop(maxRetries) { v =>
       // staging enforced the constraints live at STAGING time; a
       // concurrent addConstraint would otherwise slip violating rows
@@ -2342,9 +2343,9 @@ final class TxLogTable(spark: SparkSession,
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Long = {
     val cs0 = constraintsAt(currentVersion)
-    val staged = stageData(df, sortCols, checkConstraints = true)
+    val Staged(staged, _, stats) = stage(df, sortCols,
+      checkConstraints = true, statsCols = statsCols, bloomCols = bloomCols)
     val schemaJson = df.schema.json
-    val stats = statsOpt(staged, df.schema, statsCols, bloomCols)
     commitLoop(maxRetries) { v =>
       if (v >= 0 && constraintsAt(v) != cs0)
         enforce(readPhysical(Seq(dataDir.resolve(staged).toString),
@@ -2377,9 +2378,9 @@ final class TxLogTable(spark: SparkSession,
       sortCols: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, maxRetries: Int = 20): Long = {
     val cs0 = constraintsAt(currentVersion)
-    val staged = stageData(data, sortCols, checkConstraints = true)
+    val Staged(staged, _, stats) = stage(data, sortCols,
+      checkConstraints = true, statsCols = statsCols, bloomCols = bloomCols)
     requireStagedInRegion(staged, data.schema, condition)
-    val stats = statsOpt(staged, data.schema, statsCols, bloomCols)
     commitLoop(maxRetries) { v =>
       if (v >= 0 && constraintsAt(v) != cs0)
         enforce(readPhysical(Seq(dataDir.resolve(staged).toString),
@@ -2398,11 +2399,11 @@ final class TxLogTable(spark: SparkSession,
     */
   private[sources] def commitStagedReplaceWhere(dirName: String,
       batchSchema: StructType, condition: Column,
-      statsCols: Seq[String], bloomCols: Seq[String],
+      done: Seq[TxLogWriteDone], writeNanos: Long,
       validatedConstraints: Map[String, String] = Map.empty,
       maxRetries: Int = 20): Long = {
+    val stats = sealStaged(dirName, None, done, writeNanos)
     requireStagedInRegion(dirName, batchSchema, condition)
-    val stats = statsOpt(dirName, batchSchema, statsCols, bloomCols)
     commitLoop(maxRetries) { v =>
       val cs = constraintsAt(v)
       if (cs.nonEmpty && cs != validatedConstraints)
@@ -2517,7 +2518,8 @@ final class TxLogTable(spark: SparkSession,
 
   /** Transactional MERGE (S10/J2 semantics — latest-wins by
     * `precedence` per `key`): optimistic read-modify-write. Each
-    * attempt computes [[Upsert.mergeByKey]] against the CURRENT
+    * attempt computes the latest-wins window of
+    * [[graft.operators.Upsert.mergeByKey]] against the CURRENT
     * snapshot and bids for the next version; losing the race discards
     * the attempt's staged dir (an orphan for vacuum) and recomputes on
     * the winner's state — no update can be lost, because a commit at
@@ -2535,6 +2537,11 @@ final class TxLogTable(spark: SparkSession,
     * files plus one key-column scan — not the table. When NO file may
     * match (all-new keys), the merge commits as a plain APPEND of the
     * deduped batch.
+    *
+    * One write job stages the merged rows, their skipping stats and
+    * the commit's typed change rows together: the change feed is
+    * routed from the same window ([[routedMerge]]), never re-derived
+    * from the staged result.
     *
     * `assumeKeyUnique = true` skips the duplicate-key census — the
     * caller asserts the snapshot holds at most one row per key (true
@@ -2575,33 +2582,65 @@ final class TxLogTable(spark: SparkSession,
         if (split.touchedPaths.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         else readPathsAt(v, split.touchedPaths)
-      val merged = Upsert.mergeByKey(target, updates, key, precedence)
-      val staged = stageData(merged, sortCols, checkConstraints = true)
-      // CDC: full change rows (pre/post images, typed) — read back
-      // from the staged dir (already materialized) so the change set
-      // is BY CONSTRUCTION consistent with the commit
-      val stagedDf = readPhysical(
-        Seq(dataDir.resolve(staged).toString), merged.schema, currentColMap)
-      val touched = updates.select(key.map(updates.col): _*).distinct()
-      val cdcDir = stageCdc(target, stagedDf, touched, key)
-      val newStats = statsOpt(staged, merged.schema, statsCols)
+      val (routed, mergedSchema) =
+        routedMerge(target, updates, key, precedence)
+      val Staged(staged, Some(cdcDir), newStats) = stage(routed, sortCols,
+        checkConstraints = true, statsCols = statsCols, routed = true)
       if (split.touchedPaths.isEmpty && chain.flatMap(_.add).nonEmpty)
         // pure-insert merge on a non-empty table: an append extends
         // the live set without re-asserting it
-        Some(Manifest(0L, "append", Seq(staged), merged.schema.json,
+        Some(Manifest(0L, "append", Seq(staged), mergedSchema.json,
           System.currentTimeMillis(), wrap(markers), newStats,
           Some(Seq(cdcDir))))
       else {
         val mergedStats =
           split.keptStats ++ newStats.getOrElse(Map.empty)
         Some(Manifest(0L, "overwrite", split.kept :+ staged,
-          merged.schema.json, System.currentTimeMillis(), wrap(markers),
+          mergedSchema.json, System.currentTimeMillis(), wrap(markers),
           if (mergedStats.isEmpty) None else Some(mergedStats),
           Some(Seq(cdcDir)), split.keptCkpt,
           carriedDvFor(chain, split.kept)))
       }
     }
     finally { if (!callerCached) updates.unpersist(); () }
+  }
+
+  /** The latest-wins merge of [[graft.operators.Upsert.mergeByKey]]
+    * (one row per key, first by `precedence`) with its change feed
+    * ROUTED from the same window: per-key counts of target and update rows over the
+    * partition the window already sorts — no new exchange. A key
+    * enters the feed when no part of it is null and the batch names it
+    * or the target holds it more than once (a latest-wins collapse of
+    * an unnamed duplicate group): each of its target rows is an
+    * `update_preimage` and its winner an `update_postimage`, or an
+    * `insert` when the target never held the key. A winner equal to
+    * its pre-image is a no-op pair that cancels in any additive fold.
+    * Returns the routed frame and the data schema the commit records.
+    */
+  private def routedMerge(target: DataFrame, updates: DataFrame,
+      key: Seq[String], precedence: Seq[Column]): (DataFrame, StructType) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import TxLogTable.Leg
+    val cols = target.columns.toSeq
+    val unioned = target.withColumn("__is_t", lit(true)).unionByName(
+      updates.select(cols.map(col): _*).withColumn("__is_t", lit(false)))
+    val w = Window.partitionBy(key.map(col): _*).orderBy(precedence: _*)
+    val group =
+      w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val ranked = unioned
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("__nt", count(when(col("__is_t"), 1)).over(group))
+      .withColumn("__nu", count(when(!col("__is_t"), 1)).over(group))
+    val inFeed = key.map(col(_).isNotNull).reduce(_ && _) &&
+      (col("__nu") > 0 || col("__nt") > 1)
+    val winner = col("__rn") === 1
+    (fanOut(ranked, cols, Seq(
+      Leg(winner, lit(null).cast("string")),
+      Leg(col("__is_t") && inFeed, lit("update_preimage")),
+      Leg(winner && inFeed,
+        when(col("__nt") > 0, "update_postimage").otherwise("insert")))),
+      unioned.drop("__is_t").schema)
   }
 
   /** Transactional row-level DELETE (the third core DML next to
@@ -2611,7 +2650,9 @@ final class TxLogTable(spark: SparkSession,
     * no lost update. The CDC dir carries the dropped rows as `delete`
     * change rows, so incremental consumers ([[changes]]/[[changeFeed]],
     * the q125/q126 view-maintenance tier) see row-level deletes
-    * without snapshot diffing.
+    * without snapshot diffing. Kept and dropped rows leave the same
+    * scan of the touched files in one write job, routed to the data
+    * and change dirs by the writers.
     *
     * Cost: copy-on-write at FILE granularity — every live file whose
     * skipping stats PROVE no row matches `condition` rides the new
@@ -2648,11 +2689,13 @@ final class TxLogTable(spark: SparkSession,
         Some(Manifest(0L, "append", Nil, schema.json,
           System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
       else {
+        // one scan, one job: kept rows to the data dir, matched rows
+        // to the change dir as `delete`s
         val target = readPathsAt(v, split.touchedPaths)
-        val staged = stageData(target.filter(!cond), sortCols)
-        val cdcDir = stageData(target.filter(cond)
-          .withColumn("_change_type", lit("delete")))
-        val newStats = statsOpt(staged, schema, statsCols, bloomCols)
+        val Staged(staged, Some(cdcDir), newStats) = stage(
+          target.withColumn(TxLogTable.ChangeType, when(cond, "delete")),
+          sortCols, statsCols = statsCols, bloomCols = bloomCols,
+          routed = true)
         val merged = split.keptStats ++ newStats.getOrElse(Map.empty)
         Some(Manifest(0L, "overwrite", split.kept :+ staged, schema.json,
           System.currentTimeMillis(), wrap(markers),
@@ -2734,9 +2777,9 @@ final class TxLogTable(spark: SparkSession,
         // (scan parallelism untouched), and AQE coalesces it — a point
         // delete stages one small file instead of one near-empty file
         // per surviving scan task; a bulk delete still writes parallel
-        val staged = stageData(
+        val staged = stage(
           alive.filter(cond).withColumn("_change_type", lit("delete"))
-            .hint("rebalance"))
+            .hint("rebalance")).dir
         Some(Manifest(0L, "append", Nil, schema.json,
           System.currentTimeMillis(), wrap(markers), None,
           Some(Seq(staged)), None, Some(prevDv :+ staged)))
@@ -2809,9 +2852,9 @@ final class TxLogTable(spark: SparkSession,
           }
         val hit = alive.filter(cond)
         // sidecar = DV entries + full pre-images (the CDC pre leg)
-        val sidecar = stageData(
+        val sidecar = stage(
           hit.withColumn("_change_type", lit("update_preimage"))
-            .hint("rebalance"))
+            .hint("rebalance")).dir
         // post-images: assignments applied, cast to the column's
         // existing type (schema invariant under UPDATE), constraints
         // enforced — new row versions must satisfy the live CHECKs
@@ -2822,11 +2865,11 @@ final class TxLogTable(spark: SparkSession,
             case None => col(f.name)
           }
         }.toIndexedSeq: _*)
-        val postDir = stageData(applied.hint("rebalance"),
-          checkConstraints = true)
+        val Staged(postDir, _, postStats) = stage(
+          applied.hint("rebalance"), checkConstraints = true,
+          statsCols = statsCols, bloomCols = bloomCols)
         Some(Manifest(0L, "append", Seq(postDir), schema.json,
-          System.currentTimeMillis(), wrap(markers),
-          statsOpt(postDir, schema, statsCols, bloomCols),
+          System.currentTimeMillis(), wrap(markers), postStats,
           Some(Seq(sidecar, postDir)), None,
           Some(prevDv :+ sidecar)))
       }
@@ -2838,7 +2881,8 @@ final class TxLogTable(spark: SparkSession,
     * like [[delete]]. Assignments cast to the column's existing type
     * (the schema is invariant under UPDATE — widening is an append/
     * merge concern). CDC carries `update_preimage`/`update_postimage`
-    * pairs for the touched rows.
+    * pairs for the touched rows, routed from the same single scan and
+    * write job as the rewritten data.
     */
   def update(condition: Column, set: Map[String, Column],
       sortCols: Seq[String] = Nil, maxRetries: Int = 20,
@@ -2852,14 +2896,6 @@ final class TxLogTable(spark: SparkSession,
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"UPDATE assigns unknown column $c"))
       val cond = coalesce(condition, lit(false))
-      def applied(df: DataFrame): DataFrame =
-        df.select(df.schema.fields.map { f =>
-          set.get(f.name) match {
-            case Some(e) => when(cond, e.cast(f.dataType))
-              .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)
       // file-granular copy-on-write (same shape as [[delete]]): only
       // files whose stats admit a matching row are read and rewritten.
       // Classified on the RAW condition — the coalesce null-guard is
@@ -2874,15 +2910,27 @@ final class TxLogTable(spark: SparkSession,
         Some(Manifest(0L, "append", Nil, schema.json,
           System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
       else {
+        // one scan, one job: every row's post-state to the data dir,
+        // each matched row's pre/post pair to the change dir; the
+        // condition and assignments evaluate once per row
         val target = readPathsAt(v, split.touchedPaths)
-        val staged = stageData(applied(target), sortCols,
-          checkConstraints = true)
-        val cdcDir = stageData(
-          target.filter(cond)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(applied(target.filter(cond))
-              .withColumn("_change_type", lit("update_postimage"))))
-        val newStats = statsOpt(staged, schema, statsCols, bloomCols)
+        val cols = target.columns.toSeq
+        val assigned = schema.fields.toSeq.collect {
+          case f if set.contains(f.name) => f.name ->
+            when(col("__cond"), set(f.name).cast(f.dataType))
+              .otherwise(col(f.name))
+        }
+        val prepared = target.withColumn("__cond", cond).select(
+          (cols.map(col) :+ col("__cond")) ++
+            assigned.map { case (c, e) => e.as(s"__new_$c") }: _*)
+        val post = assigned.map { case (c, _) => c -> col(s"__new_$c") }.toMap
+        val Staged(staged, Some(cdcDir), newStats) = stage(
+          fanOut(prepared, cols, Seq(
+            TxLogTable.Leg(lit(true), lit(null).cast("string"), post),
+            TxLogTable.Leg(col("__cond"), lit("update_preimage")),
+            TxLogTable.Leg(col("__cond"), lit("update_postimage"), post))),
+          sortCols, checkConstraints = true, statsCols = statsCols,
+          bloomCols = bloomCols, routed = true)
         val merged = split.keptStats ++ newStats.getOrElse(Map.empty)
         Some(Manifest(0L, "overwrite", split.kept :+ staged, schema.json,
           System.currentTimeMillis(), wrap(markers),
@@ -2921,7 +2969,10 @@ final class TxLogTable(spark: SparkSession,
     *
     * Plan shape: ONE full-outer shuffle join on the key plus a
     * scan-stage when-chain projection — identical cost to the
-    * latest-wins [[merge]]; the clause logic adds no exchange.
+    * latest-wins [[merge]]; the clause logic adds no exchange. The
+    * typed change rows are routed from the join's `__action` in the
+    * same write job (a clause whose condition reads the target adds
+    * one window over the join output to fold a key's verdicts).
     *
     * Covers the reference's conditional upsert tier
     * (monthly_price_paid_data.py:140-160 ON CONFLICT DO UPDATE;
@@ -2938,6 +2989,7 @@ final class TxLogTable(spark: SparkSession,
       statsCols: Seq[String] = Nil,
       withSchemaEvolution: Boolean = false): Long = {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
     import TxLogTable.{MatchedDelete, MatchedUpdate}
     // four consumers of the batch (ambiguity gate, key-predicate
     // distinct, the full-outer join, the CDC touched-key set) — one
@@ -2990,8 +3042,13 @@ final class TxLogTable(spark: SparkSession,
       def srcHas(c: String): Boolean =
         source.columns.exists(_.equalsIgnoreCase(c))
       // presence markers survive the full-outer join where every data
-      // column (keys included) may be legitimately null on one side
-      val t = target.withColumn("__t_present", lit(true)).alias("t")
+      // column (keys included) may be legitimately null on one side;
+      // `__nt` counts the target rows of each key (a window over the
+      // key partitioning the join reuses — no new exchange)
+      val t = target.withColumn("__t_present", lit(true))
+        .withColumn("__nt", count(lit(1)).over(
+          Window.partitionBy(key.map(target.col): _*)))
+        .alias("t")
       val s = source.withColumn("__s_present", lit(true)).alias("s")
       val keyCond = key.map(k => col(s"t.$k") === col(s"s.$k"))
         .reduce(_ && _)
@@ -3006,15 +3063,28 @@ final class TxLogTable(spark: SparkSession,
       val insertAction =
         if (!insertWhenNotMatched) lit(DROP)
         else when(condOf(notMatchedCondition), INS).otherwise(DROP)
+      val tPresent = col("t.__t_present").isNotNull
+      val sPresent = col("s.__s_present").isNotNull
       val action =
-        when(col("t.__t_present").isNotNull && col("s.__s_present").isNull,
-          KEEP)
-        .when(col("s.__s_present").isNotNull && col("t.__t_present").isNull,
-          insertAction)
+        when(tPresent && !sPresent, KEEP)
+        .when(sPresent && !tPresent, insertAction)
         .otherwise(matchedAction)
-      val merged = j.withColumn("__action", action)
-        .filter(col("__action") =!= DROP)
-        .select(tgtCols.map { c =>
+      val kept = col("__action") =!= DROP
+      // CDC routed from the same pass: a key enters the feed when no
+      // part of it is null and the source names it or the target holds
+      // it more than once; its target rows are pre-images (`delete`
+      // when no row of the key survives), its surviving rows
+      // post-images (`insert` when the target never held it). Whether
+      // ANY row of a key survives is the row's own verdict when every
+      // clause reads only the source (one source row per key ⇒ one
+      // action per key); a clause reading the target needs the key's
+      // verdicts folded over a window of the join output.
+      val keyGroup = key.map(k => coalesce(col(s"t.$k"), col(s"s.$k")))
+      val keySurvives =
+        if (whenMatched.forall(c => readsSourceOnly(c.condition))) kept
+        else max(kept).over(Window.partitionBy(keyGroup: _*))
+      val prepared = j.withColumn("__action", action).select(
+        tgtCols.map { c =>
           // UPDATE writes source columns and keeps target-only ones;
           // INSERT writes source columns and null-fills the rest
           val upd = if (srcHas(c)) col(s"s.$c") else col(s"t.$c")
@@ -3023,24 +3093,30 @@ final class TxLogTable(spark: SparkSession,
           when(col("__action") === USE_SRC, upd)
             .when(col("__action") === INS, ins)
             .otherwise(col(s"t.$c")).as(c)
-        }: _*)
-      val staged = stageData(merged, sortCols, checkConstraints = true)
-      val stagedDf = readPhysical(
-        Seq(dataDir.resolve(staged).toString), merged.schema, currentColMap)
-      // CDC: typed change rows; the delete arm surfaces as explicit
-      // `delete` pre-images (not as absence); touched = source keys
-      val touched = source.select(key.map(source.col): _*).distinct()
-      val cdcDir = stageCdc(target, stagedDf, touched, key)
-      val newStats = statsOpt(staged, merged.schema, statsCols)
+        } ++ tgtCols.map(c => col(s"t.$c").as(s"__pre_$c")) ++ Seq(
+          kept.as("__kept"), tPresent.as("__tp"), keySurvives.as("__ks"),
+          (keyGroup.map(_.isNotNull).reduce(_ && _) &&
+            (sPresent || col("t.__nt") > 1)).as("__feed")): _*)
+      val mergedSchema = prepared.select(tgtCols.map(col): _*).schema
+      val Staged(staged, Some(cdcDir), newStats) = stage(
+        fanOut(prepared, tgtCols, Seq(
+          TxLogTable.Leg(col("__kept"), lit(null).cast("string")),
+          TxLogTable.Leg(col("__tp") && col("__feed"),
+            when(col("__ks"), "update_preimage").otherwise("delete"),
+            tgtCols.map(c => c -> col(s"__pre_$c")).toMap),
+          TxLogTable.Leg(col("__kept") && col("__feed"),
+            when(col("__tp"), "update_postimage").otherwise("insert")))),
+        sortCols, checkConstraints = true, statsCols = statsCols,
+        routed = true)
       if (split.touchedPaths.isEmpty && chain.flatMap(_.add).nonEmpty)
-        Some(Manifest(0L, "append", Seq(staged), merged.schema.json,
+        Some(Manifest(0L, "append", Seq(staged), mergedSchema.json,
           System.currentTimeMillis(), wrap(markers), newStats,
           Some(Seq(cdcDir))))
       else {
         val mergedStats =
           split.keptStats ++ newStats.getOrElse(Map.empty)
         Some(Manifest(0L, "overwrite", split.kept :+ staged,
-          merged.schema.json, System.currentTimeMillis(), wrap(markers),
+          mergedSchema.json, System.currentTimeMillis(), wrap(markers),
           if (mergedStats.isEmpty) None else Some(mergedStats),
           Some(Seq(cdcDir)), split.keptCkpt,
           carriedDvFor(chain, split.kept)))
@@ -3048,6 +3124,18 @@ final class TxLogTable(spark: SparkSession,
     }
     } finally { if (!callerCached) source.unpersist(); () }
   }
+
+  /** Whether a MERGE clause condition reads only `s.`-qualified
+    * (source) columns — then every target row a source row matches
+    * gets the same action. Anything else, unqualified names included,
+    * counts as reading the target.
+    */
+  private def readsSourceOnly(condition: Option[String]): Boolean =
+    condition.forall(c => spark.sessionState.sqlParser.parseExpression(c)
+      .collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          a.nameParts
+      }.forall(p => p.length > 1 && p.head.equalsIgnoreCase("s")))
 
   /** Transactional insert-ignore (S9/J1): same optimistic loop, rows of
     * `updates` whose key exists in the snapshot are dropped. Committed
@@ -3067,10 +3155,10 @@ final class TxLogTable(spark: SparkSession,
         .select(snap.columns.map(updates.col).toIndexedSeq: _*)
       // empty appends still commit: idempotent-replay markers rely on
       // the version advancing even when every row was a duplicate
-      val staged = stageData(newRows, checkConstraints = true)
+      val Staged(staged, _, stats) = stage(newRows, checkConstraints = true,
+        statsCols = statsCols)
       Some(Manifest(0L, "append", Seq(staged),
-        snap.schema.json, System.currentTimeMillis(), wrap(markers),
-        statsOpt(staged, snap.schema, statsCols)))
+        snap.schema.json, System.currentTimeMillis(), wrap(markers), stats))
     }
 
   // ── maintenance ───────────────────────────────────────────────────
@@ -3214,7 +3302,9 @@ final class TxLogTable(spark: SparkSession,
     * small files exactly like the rename-swap table did). Optimistic
     * like every commit: losing a race recomputes on the winner's
     * state, so compaction can run CONCURRENTLY with ingest without a
-    * stop-the-world window.
+    * stop-the-world window. The new files carry stats for every column
+    * the snapshot's stats covered, so skipping and replaceWhere keep
+    * working after a compaction.
     */
   def compact(targetRowsPerFile: Long, sortCols: Seq[String] = Nil,
       maxRetries: Int = 20): Long = {
@@ -3224,11 +3314,49 @@ final class TxLogTable(spark: SparkSession,
       val n = snap.count()
       val files =
         math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      Some(Manifest(0L, "overwrite",
-        Seq(stageData(snap.coalesce(files), sortCols)),
-        snap.schema.json, System.currentTimeMillis(), None, None,
-        Some(Nil)))
+      // the rewrite keeps the table exactly as prunable: the writers
+      // re-collect stats for every column the snapshot's stats cover
+      val (statsCols, bloomCols) = coveredStatsCols(v)
+      val Staged(staged, _, stats) = stage(snap.coalesce(files), sortCols,
+        statsCols = statsCols, bloomCols = bloomCols)
+      Some(Manifest(0L, "overwrite", Seq(staged), snap.schema.json,
+        System.currentTimeMillis(), None, stats, Some(Nil)))
     }
+  }
+
+  /** Logical names of the columns ANY live file's stats cover, as
+    * (stats columns, Bloom columns). Inline stats fold on the driver;
+    * a stats checkpoint contributes its rows' column-name sets through
+    * one shuffle-free job — the driver never collects its rows.
+    */
+  private def coveredStatsCols(v: Long): (Seq[String], Seq[String]) = {
+    import org.apache.spark.sql.functions.{col, map_keys}
+    import spark.implicits._
+    val (chain, schema) = manifestChainAt(v)
+    val logical = colMapOf(chain).map(_.swap)
+    val inline = chain.flatMap(_.stats.getOrElse(Map.empty).values)
+    val (ckptCols, ckptBlooms) =
+      chain.flatMap(_.statsFile).lastOption.fold(
+          (Seq.empty[String], Seq.empty[String])) { name =>
+        // per-partition name sets, one job, no shuffle
+        val sets = spark.read
+          .schema(Seq.empty[TxLogTable.CkptStatRow].toDS().schema)
+          .parquet(ckptPath(name).toString)
+          .select(map_keys(col("nullCounts")), map_keys(col("blooms")))
+          .as[(Seq[String], Seq[String])]
+          .mapPartitions { it =>
+            val (cs, bs) = it.foldLeft((Set.empty[String], Set.empty[String])) {
+              case ((c, b), (rc, rb)) => (c ++ rc, b ++ rb)
+            }
+            Iterator((cs.toSeq, bs.toSeq))
+          }.collect()
+        (sets.flatMap(_._1).toSeq, sets.flatMap(_._2).toSeq)
+      }
+    def named(phys: Seq[String]): Seq[String] =
+      phys.map(p => logical.getOrElse(p, p)).distinct
+        .filter(schema.fieldNames.contains)
+    (named(inline.flatMap(_.cols.keys) ++ ckptCols),
+      named(inline.flatMap(_.blooms.keys) ++ ckptBlooms))
   }
 
   /** Incremental small-files compaction (Delta's `OPTIMIZE …
@@ -3305,8 +3433,8 @@ final class TxLogTable(spark: SparkSession,
           val n = snap.count()
           val nFiles = math.max(1L,
             (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          val staged = stageData(snap.coalesce(nFiles), sortCols)
-          val newStats = statsOpt(staged, schema, statsCols)
+          val Staged(staged, _, newStats) = stage(snap.coalesce(nFiles),
+            sortCols, statsCols = statsCols)
           val merged = keptStats.result() ++ newStats.getOrElse(Map.empty)
           val keptEntries = kept.result()
           Some(Manifest(0L, "overwrite", keptEntries :+ staged,
@@ -3339,11 +3467,10 @@ final class TxLogTable(spark: SparkSession,
       val arranged = snap
         .repartitionByRange(numFiles, clusterCols.map(snap.col): _*)
         .sortWithinPartitions(clusterCols.map(snap.col): _*)
-      val staged = stageData(arranged)
+      val Staged(staged, _, stats) = stage(arranged,
+        statsCols = (clusterCols ++ statsCols).distinct)
       Some(Manifest(0L, "overwrite", Seq(staged), snap.schema.json,
-        System.currentTimeMillis(), None,
-        statsOpt(staged, snap.schema, (clusterCols ++ statsCols).distinct),
-        Some(Nil)))
+        System.currentTimeMillis(), None, stats, Some(Nil)))
     }
   }
 
@@ -3367,11 +3494,10 @@ final class TxLogTable(spark: SparkSession,
       val snap = readAt(v)
       val arranged = ZOrder.layoutBy(snap, clusterCols, bits, numFiles)
         .drop("zval")
-      val staged = stageData(arranged)
+      val Staged(staged, _, stats) = stage(arranged,
+        statsCols = (clusterCols ++ statsCols).distinct)
       Some(Manifest(0L, "overwrite", Seq(staged), snap.schema.json,
-        System.currentTimeMillis(), None,
-        statsOpt(staged, snap.schema, (clusterCols ++ statsCols).distinct),
-        Some(Nil)))
+        System.currentTimeMillis(), None, stats, Some(Nil)))
     }
   }
 
@@ -3629,9 +3755,9 @@ final class TxLogTable(spark: SparkSession,
           .toSeq ++ deltaSides
       val cdc =
         if (sides.isEmpty) Some(Nil) // no-op restore
-        else Some(Seq(stageData(
+        else Some(Seq(stage(
           sides.reduce(_.unionByName(_, allowMissingColumns = true)),
-          cmapOverride = Some(cmapT))))
+          cmapOverride = Some(cmapT)).dir))
       Some(Manifest(0L, "overwrite", dirs, schema.json,
         System.currentTimeMillis(),
         wrap(markers + ("restoredFrom" -> version.toString)), wrap2(stats),

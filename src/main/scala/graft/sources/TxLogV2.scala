@@ -20,6 +20,8 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.DataSkipping.{ColRange, FileStats}
+
 /** DataSource-V2 surface of the transactional table — the Spark-4-
   * native half of the `txlog` format. Reads resolve through
   * [[TxLogV2Table]] (one snapshot pinned per analysis), push columns
@@ -361,10 +363,11 @@ final class TxLogNativeWriteBuilder(spark: SparkSession, root: String,
   * attempts write DOT-PREFIXED (reader-invisible) files and rename
   * them visible only in their task COMMIT, so a speculative or
   * crashed attempt can never smuggle duplicate rows into the staged
-  * dir. The driver commit is one optimistic manifest bid
-  * ([[TxLogTable.commitStagedV2]]) — CHECK constraints enforced,
-  * schema evolved, stats collected, the same shape every other
-  * commit has.
+  * dir. The writers fold each file's skipping stats while they write
+  * it and return them in their commit messages; the driver commit is
+  * one optimistic manifest bid ([[TxLogTable.commitStagedV2]]) over
+  * those — CHECK constraints enforced, schema evolved, no re-scan —
+  * the same shape every other commit has.
   */
 final class TxLogBatchWrite(spark: SparkSession, root: String,
     logicalSchema: StructType, overwriteAll: Boolean,
@@ -380,6 +383,7 @@ final class TxLogBatchWrite(spark: SparkSession, root: String,
   // falls back to a validation read if the set moved concurrently
   // (the same addConstraint race guard the V1 append path has)
   @volatile private var validated: Map[String, String] = Map.empty
+  @volatile private var started = 0L
 
   /** Effective stats columns: a PARTITIONED table with no explicit
     * statsCols defaults to every skipping-eligible column (first 32,
@@ -407,25 +411,29 @@ final class TxLogBatchWrite(spark: SparkSession, root: String,
       val i = logicalSchema.fieldIndex(c)
       (i, logicalSchema.fields(i).dataType)
     }
+    started = System.nanoTime()
     TxLogDataWriterFactory(table.stagedDirPath(dirName),
       v2bridge.stagedParquetWriters(spark,
         table.physicalWriteSchema(logicalSchema)),
       TxLogV2.bindConstraints(spark,
         TxLogV2.asNullable(logicalSchema), validated),
-      keyFields)
+      keyFields,
+      table.writeStatsSpec(logicalSchema, effStatsCols, bloomCols))
   }
 
   override def commit(messages: Array[
       org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
+    val done = messages.toSeq.collect { case d: TxLogWriteDone => d }
+    val writeNanos = System.nanoTime() - started
     table.ensureExists(logicalSchema)
     replaceCond match {
       case Some(cond) =>
         table.commitStagedReplaceWhere(dirName,
-          TxLogV2.asNullable(logicalSchema), cond, effStatsCols,
-          bloomCols, validated)
+          TxLogV2.asNullable(logicalSchema), cond, done, writeNanos,
+          validated)
       case None =>
         table.commitStagedV2(dirName, TxLogV2.asNullable(logicalSchema),
-          overwriteAll, effStatsCols, bloomCols, validated)
+          overwriteAll, done, writeNanos, validated)
     }
     ()
   }
@@ -487,7 +495,8 @@ final class TxLogStreamingWrite(spark: SparkSession, root: String,
         table.physicalWriteSchema(logicalSchema)),
       TxLogV2.bindConstraints(spark,
         TxLogV2.asNullable(logicalSchema), validated),
-      keyFields)
+      keyFields,
+      table.writeStatsSpec(logicalSchema, statsCols, bloomCols))
   }
 
   override def commit(epochId: Long, messages: Array[
@@ -502,7 +511,8 @@ final class TxLogStreamingWrite(spark: SparkSession, root: String,
     table.ensureExists(logicalSchema)
     table.mkStagedDir(dir) // an empty batch never opened a file
     table.commitStagedV2(dir, TxLogV2.asNullable(logicalSchema),
-      overwrite = false, statsCols, bloomCols, validated,
+      overwrite = false,
+      messages.toSeq.collect { case d: TxLogWriteDone => d }, 0L, validated,
       markers = Map(scopedMarker -> epochId.toString,
         TxLogStream.SinkBatchMarker -> epochId.toString))
     checkpointEvery.foreach(n => table.maybeCheckpoint(n))
@@ -521,51 +531,265 @@ private[sources] final case class TxLogStreamingWriterFactory(
     baseDirPath: String, writers: v2bridge.StagedParquetWriters,
     constraints: Seq[(String, String,
       org.apache.spark.sql.catalyst.expressions.Expression)],
-    clusterKeys: Seq[(Int, DataType)])
+    clusterKeys: Seq[(Int, DataType)],
+    stats: TxLogStatsSpec = TxLogStatsSpec.none)
     extends org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new TxLogDataWriter(s"$baseDirPath-$epochId", writers, partitionId,
-      taskId, constraints, clusterKeys)
+    new TxLogDataWriter(TxLogDataWriterFactory(s"$baseDirPath-$epochId",
+      writers, constraints, clusterKeys, stats), partitionId, taskId)
 }
 
-private[sources] final case class TxLogWriteDone(file: String, rows: Long)
+/** One part-file a task attempt published: its name inside the staged
+  * dir, rows, on-disk bytes, and — for data files of a write with
+  * stats or Bloom columns — the skipping stats the writer folded while
+  * writing it.
+  */
+private[sources] final case class TxLogFileDone(name: String, rows: Long,
+    bytes: Long, stats: Option[FileStats])
+
+/** A task attempt's commit message: the data files and, for a routed
+  * DML write, the change-row files it published.
+  */
+private[sources] final case class TxLogWriteDone(files: Seq[TxLogFileDone],
+    cdcFiles: Seq[TxLogFileDone] = Nil)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
+/** The per-file skipping stats the writers fold while they write — the
+  * one stats path of every txlog commit. `cols` get min/max/null
+  * count/theta and `blooms` a Bloom filter, each as (ordinal in the
+  * written row, physical name, type); `timeZone` is the session zone
+  * the theta sketch's string cast renders timestamps in.
+  */
+private[sources] final case class TxLogStatsSpec(
+    cols: Seq[(Int, String, DataType)],
+    blooms: Seq[(Int, String, DataType)], timeZone: String) {
+  def isEmpty: Boolean = cols.isEmpty && blooms.isEmpty
+}
+
+private[sources] object TxLogStatsSpec {
+  val none: TxLogStatsSpec = TxLogStatsSpec(Nil, Nil, "UTC")
+  val BloomExpectedItems: Long = 100000L
+  val BloomFpp: Double = 0.01
+  val ThetaLgK: Int = 9
+
+  /** The spec over a written row layout (physical names); columns that
+    * are absent or of an unsupported type are skipped (no stats ⇒
+    * never pruned).
+    */
+  def of(schema: StructType, statsCols: Seq[String],
+      bloomCols: Seq[String], timeZone: String): TxLogStatsSpec = {
+    def pick(cs: Seq[String], ok: DataType => Boolean) =
+      cs.distinct.flatMap { c =>
+        val i = schema.fieldNames.indexOf(c)
+        if (i >= 0 && ok(schema(i).dataType)) Some((i, c, schema(i).dataType))
+        else None
+      }
+    TxLogStatsSpec(pick(statsCols, DataSkipping.supported),
+      pick(bloomCols, DataSkipping.bloomSupported), timeZone)
+  }
+}
+
+/** Folds one data file's rows into its [[FileStats]], bit-equal to the
+  * grouped per-file aggregate (`min`, `max`, `count`,
+  * `BloomFilterAggregate` over the canonical `xxhash64`,
+  * [[graft.plans.ThetaSketchAgg]] over the string cast) the stats were
+  * once collected with by a re-scan:
+  *   - min/max fold in row order under Spark's SQL ordering (NaN above
+  *     every number, -0.0 equal to 0.0, a tie keeps the earlier value —
+  *     the `least`/`greatest` update `Min`/`Max` run) and encode through
+  *     the external conversion a collected row takes;
+  *   - Bloom and theta run Spark's own aggregate objects, then the
+  *     partial→final step the grouped aggregate applied (serialize,
+  *     deserialize, merge into a fresh buffer), so the bytes match.
+  */
+private[sources] final class FileStatsFold(spec: TxLogStatsSpec) {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, XxHash64}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate, TypedImperativeAggregate}
+
+  private val cols = spec.cols.toArray
+  private val orderings = cols.map(c =>
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(c._3))
+  private val mins = new Array[Any](cols.length)
+  private val maxs = new Array[Any](cols.length)
+  private val nulls = new Array[Long](cols.length)
+  private var rows = 0L
+
+  private val thetas = cols.map { case (i, _, dt) =>
+    graft.plans.ThetaSketchAgg(Cast(BoundReference(i, dt, nullable = true),
+      StringType, Some(spec.timeZone)), TxLogStatsSpec.ThetaLgK)
+  }
+  private val thetaBufs = thetas.map(_.createAggregationBuffer())
+
+  private val blooms = spec.blooms.toArray.map { case (i, _, dt) =>
+    val ref = BoundReference(i, dt, nullable = true)
+    // canonical hash form (DataSkipping.bloomHash's contract):
+    // integrals as LONG, strings raw
+    val canon = dt match {
+      case _: StringType => ref
+      case _ => Cast(ref, LongType, Some(spec.timeZone))
+    }
+    new BloomFilterAggregate(new XxHash64(Seq(canon)),
+      Literal(TxLogStatsSpec.BloomExpectedItems),
+      Literal(org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(
+        TxLogStatsSpec.BloomExpectedItems, TxLogStatsSpec.BloomFpp)))
+  }
+  private val bloomBufs = blooms.map(_.createAggregationBuffer())
+
+  def update(r: InternalRow): Unit = {
+    rows += 1
+    var j = 0
+    while (j < cols.length) {
+      val i = cols(j)._1
+      if (r.isNullAt(i)) nulls(j) += 1
+      else {
+        val v = r.get(i, cols(j)._3)
+        if (mins(j) == null || orderings(j).lt(v, mins(j)))
+          mins(j) = InternalRow.copyValue(v)
+        if (maxs(j) == null || orderings(j).gt(v, maxs(j)))
+          maxs(j) = InternalRow.copyValue(v)
+      }
+      thetas(j).update(thetaBufs(j), r)
+      j += 1
+    }
+    j = 0
+    while (j < blooms.length) {
+      blooms(j).update(bloomBufs(j), r)
+      j += 1
+    }
+  }
+
+  private def finalBytes[T](agg: TypedImperativeAggregate[T],
+      buf: T): Option[String] =
+    Option(agg.eval(agg.merge(agg.createAggregationBuffer(),
+      agg.deserialize(agg.serialize(buf))))).map(b =>
+      java.util.Base64.getEncoder.encodeToString(b.asInstanceOf[Array[Byte]]))
+
+  def result(): FileStats = {
+    def external(j: Int, v: Any): Option[String] =
+      if (v == null) None
+      else DataSkipping.encodeExternal(org.apache.spark.sql.catalyst
+        .CatalystTypeConverters.convertToScala(v, cols(j)._3))
+    FileStats(rows,
+      cols.indices.map(j => cols(j)._2 ->
+        ColRange(external(j, mins(j)), external(j, maxs(j)), nulls(j))).toMap,
+      blooms.indices.flatMap(j => finalBytes(blooms(j), bloomBufs(j))
+        .map(spec.blooms(j)._2 -> _)).toMap,
+      cols.indices.flatMap(j => finalBytes(thetas(j), thetaBufs(j))
+        .map(cols(j)._2 -> _)).toMap)
+  }
+}
+
+/** Everything one write's task attempts need: the staged data dir and
+  * its parquet writers, the bound CHECK constraints, the cluster keys
+  * the writer rolls files on, the stats to fold, and — for a ROUTED
+  * DML write — the change dir and its writers. A routed write's rows
+  * carry `_change_type` as their last field: null sends the row (minus
+  * that field) to the data dir, a change type sends it whole to the
+  * change dir, so a commit writes its data and its CDC in one job.
+  */
 private[sources] final case class TxLogDataWriterFactory(dir: String,
     writers: v2bridge.StagedParquetWriters,
     constraints: Seq[(String, String,
       org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-    clusterKeys: Seq[(Int, DataType)] = Nil)
+    clusterKeys: Seq[(Int, DataType)] = Nil,
+    stats: TxLogStatsSpec = TxLogStatsSpec.none,
+    cdc: Option[(String, v2bridge.StagedParquetWriters)] = None)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new TxLogDataWriter(dir, writers, partitionId, taskId, constraints,
-      clusterKeys)
+    new TxLogDataWriter(this, partitionId, taskId)
 }
 
-/** One task attempt's writer: rows stream to hidden in-progress
-  * files; task commit renames them visible; abort deletes them.
-  * Empty partitions never open a file. With cluster keys the writer
-  * ROLLS to a fresh file on every key change (rows arrive clustered
-  * and sorted, so runs are contiguous and files-per-value stays one
-  * per task) — hive-style partition layout without per-value
-  * directories.
+private[sources] object TxLogDataWriter {
+  /** Test hook: every task attempt runs it with its attempt number
+    * after it wrote and closed all its files, before it asks the
+    * commit coordinator to commit — retry specs fail attempts here.
+    */
+  @volatile private[sources] var afterWrite: Int => Unit = _ => ()
+}
+
+/** One task attempt's writer: rows stream to hidden in-progress files;
+  * task commit renames them visible; abort deletes every file the
+  * attempt created, visible or not. Empty partitions never open a
+  * file. With cluster keys the writer ROLLS to a fresh file on every
+  * key change (rows arrive clustered and sorted, so runs are
+  * contiguous and files-per-value stays one per task) — hive-style
+  * partition layout without per-value directories.
   */
-private final class TxLogDataWriter(dir: String,
-    writers: v2bridge.StagedParquetWriters, partitionId: Int, taskId: Long,
-    constraints: Seq[(String, String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-    clusterKeys: Seq[(Int, DataType)] = Nil)
+private final class TxLogDataWriter(f: TxLogDataWriterFactory,
+    partitionId: Int, taskId: Long)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
-  private var writer: v2bridge.StagedRowWriter = null
-  private var seq = 0
-  private var staged: List[(String, String)] = Nil // (tmp, final)
-  private val keysArr: Array[(Int, DataType)] = clusterKeys.toArray
+  /** The part-files of one staged dir this attempt writes. */
+  private final class PartFiles(dir: String,
+      writers: v2bridge.StagedParquetWriters, stats: TxLogStatsSpec) {
+    private var writer: v2bridge.StagedRowWriter = null
+    private var fold: FileStatsFold = null
+    private var rows = 0L
+    private var seq = 0
+    private var current: (String, String) = null // (tmp, final)
+    private var opened: List[(String, String)] = Nil
+    private val done = List.newBuilder[TxLogFileDone]
+
+    def write(r: InternalRow): Unit = {
+      if (writer == null) {
+        current = (
+          f"$dir/.inprogress-$partitionId%05d-$taskId-$seq.parquet",
+          f"$dir/part-$partitionId%05d-$taskId-$seq.parquet")
+        seq += 1
+        opened ::= current
+        writer = writers.open(current._1, partitionId, taskId)
+        fold = if (stats.isEmpty) null else new FileStatsFold(stats)
+        rows = 0L
+      }
+      writer.write(r)
+      if (fold != null) fold.update(r)
+      rows += 1
+    }
+
+    /** Finish the open file (if any): complete on disk, stats final. */
+    def roll(): Unit =
+      if (writer != null) {
+        writer.close()
+        writer = null
+        done += TxLogFileDone(current._2.substring(dir.length + 1), rows,
+          writers.size(current._1), Option(fold).map(_.result()))
+      }
+
+    def publish(): Seq[TxLogFileDone] = {
+      roll()
+      opened.reverse.foreach { case (tmp, fin) =>
+        require(writers.rename(tmp, fin),
+          s"staged-file publish failed: $tmp -> $fin")
+      }
+      done.result()
+    }
+
+    def discard(): Unit = {
+      if (writer != null) {
+        try writer.close() catch { case scala.util.control.NonFatal(_) => }
+        writer = null
+      }
+      opened.foreach { case (tmp, fin) =>
+        writers.delete(tmp); writers.delete(fin)
+      }
+    }
+
+    def close(): Unit =
+      if (writer != null) { writer.close(); writer = null }
+  }
+
+  private val data = new PartFiles(f.dir, f.writers, f.stats)
+  private val changes = f.cdc.map { case (d, w) =>
+    new PartFiles(d, w, TxLogStatsSpec.none) }
+  private val dataWidth = f.writers.schema.length
+  private val dataRow = if (changes.isEmpty) null
+    else org.apache.spark.sql.catalyst.ProjectingInternalRow(
+      f.writers.schema, 0 until dataWidth)
+  private val keysArr: Array[(Int, DataType)] = f.clusterKeys.toArray
   private var curKey: Array[Any] = null
-  private var rows = 0L
 
   /** The CHECK conjunction compiled ONCE per writer through Spark's
     * whole-expression codegen (`Predicate.create`, interpreted
@@ -575,7 +799,7 @@ private final class TxLogDataWriter(dir: String,
     */
   private lazy val compiled: Array[(String, String,
       org.apache.spark.sql.catalyst.expressions.BasePredicate)] =
-    constraints.iterator.map { case (name, sql, bound) =>
+    f.constraints.iterator.map { case (name, sql, bound) =>
       val p = org.apache.spark.sql.catalyst.expressions.Predicate
         .create(bound)
       p.initialize(partitionId)
@@ -584,8 +808,7 @@ private final class TxLogDataWriter(dir: String,
 
   /** Row's cluster key equals the current run's key? Field-wise
     * compare against the captured values — no per-row allocation
-    * (the old Seq-building compare allocated on EVERY row; a copy now
-    * happens only when the key actually rolls).
+    * (a copy happens only when the key actually rolls).
     */
   private def sameKey(r: InternalRow): Boolean = {
     var j = 0
@@ -606,62 +829,102 @@ private final class TxLogDataWriter(dir: String,
     var j = 0
     while (j < keysArr.length) {
       val (i, dt) = keysArr(j)
-      curKey(j) =
-        if (r.isNullAt(i)) null
-        else r.get(i, dt) match {
-          case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-          case v => v
-        }
+      curKey(j) = if (r.isNullAt(i)) null else InternalRow.copyValue(r.get(i, dt))
       j += 1
     }
   }
 
-  private def closeCurrent(): Unit =
-    if (writer != null) { writer.close(); writer = null }
+  override def write(r: InternalRow): Unit =
+    if (changes.isDefined && !r.isNullAt(dataWidth)) changes.get.write(r)
+    else {
+      val row =
+        if (dataRow == null) r
+        else { dataRow.project(r); dataRow }
+      // fail-fast per-row CHECK enforcement inside the write task —
+      // single pass; only FALSE violates (the bound predicate
+      // coalesces NULL→true)
+      var i = 0
+      while (i < compiled.length) {
+        val (name, sql, pred) = compiled(i)
+        if (!pred.eval(row))
+          throw new IllegalStateException(
+            s"CHECK constraint '$name' violated: $sql")
+        i += 1
+      }
+      if (keysArr.nonEmpty) {
+        if (curKey == null) captureKey(row)
+        else if (!sameKey(row)) { data.roll(); captureKey(row) }
+      }
+      data.write(row)
+    }
 
-  override def write(r: InternalRow): Unit = {
-    // fail-fast per-row CHECK enforcement inside the write task —
-    // single pass, the same point the V1 staging job enforces at;
-    // only FALSE violates (the bound predicate coalesces NULL→true)
-    var i = 0
-    while (i < compiled.length) {
-      val (name, sql, pred) = compiled(i)
-      if (!pred.eval(r))
-        throw new IllegalStateException(
-          s"CHECK constraint '$name' violated: $sql")
-      i += 1
-    }
-    if (keysArr.nonEmpty) {
-      if (curKey == null) captureKey(r)
-      else if (!sameKey(r)) { closeCurrent(); captureKey(r) }
-    }
-    if (writer == null) {
-      val tmp = f"$dir/.inprogress-$partitionId%05d-$taskId-$seq.parquet"
-      val fin = f"$dir/part-$partitionId%05d-$taskId-$seq.parquet"
-      seq += 1
-      staged ::= (tmp, fin)
-      writer = writers.open(tmp, partitionId, taskId)
-    }
-    writer.write(r)
-    rows += 1
+  override def writeAll(records: java.util.Iterator[InternalRow]): Unit = {
+    while (records.hasNext) write(records.next())
+    data.roll()
+    changes.foreach(_.roll())
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(c => TxLogDataWriter.afterWrite(c.attemptNumber()))
   }
 
   override def commit()
       : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    closeCurrent()
-    staged.reverse.foreach { case (tmp, fin) =>
-      require(writers.rename(tmp, fin),
-        s"staged-file publish failed: $tmp -> $fin")
-    }
-    TxLogWriteDone(staged.map(_._2).mkString(","), rows)
+    val done = TxLogWriteDone(data.publish(),
+      changes.map(_.publish()).getOrElse(Nil))
+    val all = done.files ++ done.cdcFiles
+    v2bridge.reportOutput(all.map(_.rows).sum, all.map(_.bytes).sum)
+    done
   }
 
   override def abort(): Unit = {
-    closeCurrent()
-    staged.foreach { case (tmp, _) => writers.delete(tmp) }
+    data.discard()
+    changes.foreach(_.discard())
   }
 
-  override def close(): Unit = closeCurrent()
+  override def close(): Unit = {
+    data.close()
+    changes.foreach(_.close())
+  }
+}
+
+/** The stage-only native write every [[TxLogTable]] commit stages its
+  * rows through: a `BATCH_WRITE` table whose batch hands one
+  * [[TxLogDataWriterFactory]] to Spark's DSv2 write task — attempts
+  * commit through the `OutputCommitCoordinator`, and the whole write
+  * is one SQL execution listeners and AQE see — and keeps the commit
+  * messages for the caller instead of publishing anything: the
+  * manifest commit stays the caller's.
+  */
+private[sources] final class TxLogStageTable(writeSchema: StructType,
+    factory: TxLogDataWriterFactory)
+    extends Table with SupportsWrite {
+
+  @volatile private[sources] var messages: Seq[TxLogWriteDone] = Nil
+
+  override def name(): String = s"txlog stage ${factory.dir}"
+  override def schema(): StructType = writeSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder {
+      override def build(): Write = new Write {
+        override def description(): String = name()
+        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
+          new org.apache.spark.sql.connector.write.BatchWrite {
+            override def createBatchWriterFactory(
+                pinfo: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
+                : org.apache.spark.sql.connector.write.DataWriterFactory =
+              factory
+            override def commit(ms: Array[
+                org.apache.spark.sql.connector.write.WriterCommitMessage])
+                : Unit =
+              messages = ms.toSeq.collect { case d: TxLogWriteDone => d }
+            override def abort(ms: Array[
+                org.apache.spark.sql.connector.write.WriterCommitMessage])
+                : Unit = ()
+          }
+      }
+    }
 }
 
 /** V2 pushdown for one snapshot scan. Predicates are pushed for

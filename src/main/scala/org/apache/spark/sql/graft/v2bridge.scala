@@ -101,7 +101,7 @@ object v2bridge {
   final class StagedParquetWriters private[graft] (
       factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
       conf: org.apache.spark.util.SerializableConfiguration,
-      schema: StructType) extends Serializable {
+      val schema: StructType) extends Serializable {
 
     def open(path: String, partitionId: Int, taskId: Long): StagedRowWriter = {
       import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
@@ -129,6 +129,11 @@ object v2bridge {
       p.getFileSystem(conf.value).delete(p, false)
       ()
     }
+
+    def size(path: String): Long = {
+      val p = new Path(path)
+      p.getFileSystem(conf.value).getFileStatus(p).getLen
+    }
   }
 
   def stagedParquetWriters(spark: SparkSession,
@@ -140,6 +145,34 @@ object v2bridge {
     new StagedParquetWriters(factory,
       new org.apache.spark.util.SerializableConfiguration(
         job.getConfiguration), schema)
+  }
+
+  /** Add a task's written rows and bytes to its output metrics — what
+    * Spark's own file writers report through their stats tracker, so
+    * listeners see the txlog writers' output too (a DSv2 write task
+    * reports none by itself).
+    */
+  def reportOutput(records: Long, bytes: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { c =>
+      val m = c.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
+
+  /** Run `df` into a DSv2 `table` as one by-position `AppendData` —
+    * executed eagerly, as one SQL execution, through Spark's own V2
+    * write path (`DataWritingSparkTask` with the output commit
+    * coordinator). The txlog staged writes use it with a stage-only
+    * table whose commit only keeps the writers' messages.
+    */
+  def appendByPosition(df: org.apache.spark.sql.DataFrame,
+      table: org.apache.spark.sql.connector.catalog.Table): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.AppendData
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    bridge.ofRows(df.sparkSession, AppendData.byPosition(
+      DataSourceV2Relation.create(table, None, None),
+      df.queryExecution.analyzed))
+    ()
   }
 
   /** Decode a stats string in `CatalogColumnStat.fromExternalString`

@@ -122,9 +122,9 @@ class TxLogDistributedPlanSpec extends SparkSpec {
     // orphan two staged dirs (lost commit races) + two historical
     // commits an overwrite supersedes
     import scala.jdk.CollectionConverters._
-    t.stageData(spark.createDataFrame(
+    t.stage(spark.createDataFrame(
       Seq(Row(9L, 1L, 1L): Row).asJava, sch))
-    t.stageData(spark.createDataFrame(
+    t.stage(spark.createDataFrame(
       Seq(Row(9L, 2L, 2L): Row).asJava, sch))
     // driver-arm DRY RUN is the reference
     TxLogTable.lastPlanMaterialized = -1

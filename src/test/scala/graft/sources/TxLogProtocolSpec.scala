@@ -152,7 +152,7 @@ class TxLogProtocolSpec extends SparkSpec {
     t.append(df((1L, "a", L(1))))
     // simulate a concurrent writer mid-commit: data staged, manifest
     // not yet published — the dir is unreferenced but MUST survive
-    val staged = t.stageData(df((2L, "b", L(2))))
+    val staged = t.stage(df((2L, "b", L(2)))).dir
     assert(t.vacuum(retainHistory = false) === Nil,
       "age-guarded vacuum must not collect a fresh staged dir")
     // the writer's commit still lands on intact data
@@ -160,7 +160,7 @@ class TxLogProtocolSpec extends SparkSpec {
     assert(t.read().count() == 1) // overwrite replaced the live set
     assert(t.read().collect().head.getLong(0) == 2L)
     // a genuinely dead orphan is collected once it ages past the bar
-    val orphan = t.stageData(df((3L, "c", L(3))))
+    val orphan = t.stage(df((3L, "c", L(3)))).dir
     assert(t.vacuum(retainHistory = true) === Nil)
     val removed = t.vacuum(retainHistory = true, minAgeMillis = 0L)
     assert(removed == Seq(orphan))

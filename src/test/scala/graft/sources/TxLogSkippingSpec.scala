@@ -75,6 +75,29 @@ class TxLogSkippingSpec extends SparkSpec {
     check(col("ts") > 3000L, 4)
   }
 
+  test("compact re-collects the covered stats: pruning and replaceWhere survive it") {
+    val t = fresh()
+    t.ensureExists(schema)
+    (0L until 4L).foreach { b =>
+      t.append(df((b * 100L until b * 100L + 50L).map(k =>
+          (k, s"v$k", k * 10L)): _*).coalesce(1),
+        statsCols = Seq("k"), bloomCols = Seq("v"))
+    }
+    t.checkpoint() // the covered columns now come from the checkpoint
+    val v = t.compact(targetRowsPerFile = 1000)
+    val (files, stats, uncovered) = t.fileStatsSplitAt(v).get
+    assert(uncovered.isEmpty && files.nonEmpty)
+    files.foreach { f =>
+      assert(stats(f).cols.keySet === Set("k"))
+      assert(stats(f).blooms.keySet === Set("v"))
+    }
+    assert(t.scanPathsAt(v, col("k") > 10000L).isEmpty)
+    assert(t.scanPathsAt(v, col("v") === "absent").isEmpty)
+    // a whole-table compaction no longer makes replaceWhere refuse
+    t.replaceWhere(df((7L, "x", 70L)), col("k") < 1000L, statsCols = Seq("k"))
+    assert(sortedRows(t.read()) === Seq("[7,x,70]"))
+  }
+
   test("compactClustered: range-disjoint files make skipping bite after the fact") {
     val t = fresh()
     t.ensureExists(schema)

@@ -157,7 +157,7 @@ class TxLogStreamSpec extends SparkSpec {
     assert(t.read().count() === 2L)
     assert(t.marker(TxLogStream.SinkBatchMarker) === Some("0"))
     // the NATIVE path staged the epoch dir (stream-<uuid>-<epoch>),
-    // not the V1 sink's stageData dir
+    // not the V1 sink's uuid-named staged dir
     assert(t.liveDataPaths(t.currentVersion).exists(_.contains("stream-")),
       t.liveDataPaths(t.currentVersion).mkString(", "))
     val v1 = t.currentVersion

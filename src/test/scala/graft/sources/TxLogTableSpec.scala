@@ -93,7 +93,7 @@ class TxLogTableSpec extends SparkSpec {
     val v0 = t.currentVersion
     val mergedA = graft.operators.Upsert.mergeByKey(
       t.readAt(v0), df((10L, "A", 1L)), Seq("k"), Seq(col("ts").desc))
-    val stagedA = t.stageData(mergedA)
+    val stagedA = t.stage(mergedA).dir
     val okB = t.merge(df((20L, "B", 1L)), Seq("k"), Seq(col("ts").desc))
     assert(okB === v0 + 1)
     // A's bid for the version B just took: atomically rejected
