@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.FixedPoint
+
 /** Distributed BPE (byte-pair-encoding) vocabulary training — the
   * tokenizer-construction step of an LLM data stack (Sennrich et al.
   * 2016; the GPT-2/LLaMA tokenizer family trains exactly this loop).
@@ -81,17 +83,23 @@ object Bpe {
     * the pair — non-overlapping by construction because the merged
     * symbol no longer equals `left` (BPE merges grow strictly).
     */
-  def foldMerges(syms: Column, merges: Seq[(String, String)]): Column = {
+  def foldMerges(syms: Column, merges: Seq[(String, String)]): Column =
+    foldJoined(syms, merges.map { case (l, r) => (l, r, l + r) })
+
+  /** [[foldMerges]] over `(left, right, product)` merges — the product
+    * is a parameter so [[WordPiece]] folds with its own join.
+    */
+  private[ext] def foldJoined(syms: Column,
+      merges: Seq[(String, String, String)]): Column = {
     if (merges.isEmpty) syms
     else aggregate(
-      typedLit(merges).cast("array<struct<l:string,r:string>>"),
+      typedLit(merges).cast("array<struct<l:string,r:string,j:string>>"),
       syms,
       (acc, m) => aggregate(acc, array().cast("array<string>"),
         (out, s) => when(
           size(out) > 0 && element_at(out, -1) === m.getField("l") &&
             s === m.getField("r"),
-          concat(slice(out, lit(1), size(out) - 1),
-            array(concat(m.getField("l"), m.getField("r")))))
+          concat(slice(out, lit(1), size(out) - 1), array(m.getField("j"))))
           .otherwise(concat(out, array(s)))))
   }
 
@@ -102,36 +110,11 @@ object Bpe {
   /** Train `nMerges` BPE merges. Returns the ordered merge list —
     * the learned tokenizer. Each round: exact pair count (vocab-sized
     * shuffle), deterministic argmax to the driver (ONE row), fold the
-    * merge through the symbol table. `localCheckpoint` per round keeps
-    * lineage flat (the [[PageRank]] recipe); the symbol table is
-    * reused across rounds via persist.
+    * merge through the symbol table. A lazy `localCheckpoint` per
+    * round keeps lineage flat ([[graft.core.FixedPoint.trainMerges]]).
     */
   def train(docs: DataFrame, textCol: String, nMerges: Int): Seq[(String, String)] =
     trainFromWords(wordFreq(docs, textCol), nMerges)
-
-  /** Greedy non-overlapping selection from a ranked candidate list:
-    * take pairs in rank order, skipping any that shares a symbol with
-    * an already-taken pair. Symbol-disjoint pairs have EXACTLY
-    * invariant counts under each other's application (a merge only
-    * creates/destroys pairs involving its own operands or product),
-    * so applying a disjoint batch in rank order equals running the
-    * classic one-merge loop whenever no skip occurred — and is a
-    * documented rank-order approximation when one did.
-    */
-  private[ext] def pickDisjoint(ranked: Seq[(String, String)],
-      want: Int): Seq[(String, String)] = {
-    val used = scala.collection.mutable.Set.empty[String]
-    val out = Seq.newBuilder[(String, String)]
-    var taken = 0
-    val it = ranked.iterator
-    while (taken < want && it.hasNext) {
-      val (l, r) = it.next()
-      if (!used(l) && !used(r)) {
-        out += ((l, r)); used += l; used += r; taken += 1
-      }
-    }
-    out.result()
-  }
 
   /** Test hook: training rounds (= Spark job waves) of the most recent
     * trainFromWords call — lets the batching spec pin
@@ -160,41 +143,14 @@ object Bpe {
     */
   def trainFromWords(words: DataFrame, nMerges: Int,
       batchMerges: Int = 1): Seq[(String, String)] = {
-    require(nMerges >= 0)
-    require(batchMerges >= 1, "batchMerges must be >= 1")
     // LAZY checkpoints throughout the loop: each round's top-pair
-    // collect is the next action anyway, so it materializes the symbol
-    // table inside its own job — one job per round instead of two —
-    // and the LAST round's fold (consumed by nobody: the merge list is
-    // the result) never materializes at all. Plans stay flat (the
-    // checkpoint leaf is a LogicalRDD either way), which is what the
-    // checkpoint is here for (the nested merge-fold AQE pathology in
-    // the scaladoc).
-    var syms = initialSymbols(words).localCheckpoint(eager = false)
-    val merges = Seq.newBuilder[(String, String)]
-    var done = false
-    var count = 0
-    var rounds = 0
-    while (count < nMerges && !done) {
-      val want = math.min(batchMerges, nMerges - count)
-      // fetch enough ranked candidates to survive overlap skips; the
-      // driver rows stay bounded by the batch size, never the vocab
-      val top = pairCounts(syms)
-        .orderBy(col("pair_count").desc, col("left"), col("right"))
-        .limit(want * 4 + 8).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
-      val picked = pickDisjoint(top, want)
-      if (picked.isEmpty) done = true // every word fused to one symbol
-      else {
-        merges ++= picked
-        count += picked.size
-        syms = syms.withColumn("syms", foldMerges(col("syms"), picked))
-          .localCheckpoint(eager = false)
-      }
-      rounds += 1
-    }
+    // collect materializes the symbol table inside its own job, so the
+    // initial table costs no job of its own
+    val (merges, rounds) = FixedPoint.trainMerges(
+      initialSymbols(words).localCheckpoint(eager = false), nMerges,
+      batchMerges, "pair_count")(pairCounts, foldMerges)
     lastTrainRounds = rounds
-    merges.result()
+    merges
   }
 
   /** Tokenize words with a trained merge list: split to chars and fold

@@ -115,9 +115,12 @@ object CentroidAssign {
         }
         acc.iterator.map { case (c, (s, n)) => (c, s, n) }
       }
+    // one physical plan: the partition-count probe and the collect
+    // both run off the same RDD (collecting the Dataset again would
+    // plan, and with AQE re-run, the round's pipeline a second time)
     val rdd = perPartition.rdd
     val partials: Array[(Int, Array[Double], Long)] =
-      if (rdd.getNumPartitions <= MaxDirectPartials) perPartition.collect()
+      if (rdd.getNumPartitions <= MaxDirectPartials) rdd.collect()
       else rdd
         .map { case (c, s, n) => (c, (s, n)) }
         .reduceByKey { (a, b) => (mergeInto(a._1, b._1), a._2 + b._2) }
@@ -255,12 +258,12 @@ object CentroidAssign {
       merge128(a._2, a._3, b._2, b._3)
       (a._1, a._2, a._3, mergeSide(a._4, b._4), a._5 + b._5)
     }
-    val rdd = perPartition.rdd
+    val rdd = perPartition.rdd // one physical plan (see cellMeans)
     // exact integer sums are order-independent, so the distributed
     // by-cell reduce is value-identical to the driver merge — the
     // split exists purely to bound driver state (see cellMeans)
     val partials: Array[DecPartial] =
-      if (rdd.getNumPartitions <= MaxDirectPartials) perPartition.collect()
+      if (rdd.getNumPartitions <= MaxDirectPartials) rdd.collect()
       else rdd
         .map(p => (p._1, p))
         .reduceByKey(mergePartial)

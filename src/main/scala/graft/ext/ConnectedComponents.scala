@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.FixedPoint
+
 /** Iterative connected components over a near-duplicate pair graph —
   * the closure pass that turns pairwise matches into dedup groups
   * (one-hop dropping misses chains: a~b, b~c ⇒ {a,b,c} is one group
@@ -16,7 +18,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: each round is one shuffle (groupBy vertex). Frames are
   * localCheckpoint()ed per round to cut the growing lineage — without
-  * it, round k replans the whole k-deep DAG. For graphs with billions
+  * it, round k replans the whole k-deep DAG — and each checkpoint job
+  * also observes the round's convergence scalar
+  * ([[graft.core.FixedPoint]]). For graphs with billions
   * of edges use the large-star/small-star variant; this direct
   * propagation is right for dedup-shaped (sparse, shallow) graphs.
   */
@@ -26,8 +30,10 @@ object ConnectedComponents {
     * @return (vertex, component) — component = min vertex id reachable
     */
   def run(pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 10): DataFrame =
-    hashMin(canonEdges(pairs, srcCol, dstCol), maxIter)._1
+      maxIter: Int = 10): DataFrame = {
+    val (edges, m) = canonEdges(pairs, srcCol, dstCol)
+    hashMin(edges, m, maxIter)._1
+  }
 
   /** Auto-dispatch between [[run]] (hash-min, O(diameter) rounds — the
     * dedup-graph fast path) and [[runTwoPhase]] (O(log² n) rounds — the
@@ -48,35 +54,37 @@ object ConnectedComponents {
   private[ext] def autoWithStrategy(
       pairs: DataFrame, srcCol: String, dstCol: String,
       hashMinRounds: Int, twoPhaseEdges: Long): (String, DataFrame) = {
-    val edges0 = canonEdges(pairs, srcCol, dstCol)
-    if (edges0.count() > twoPhaseEdges)
+    val (edges0, m) = canonEdges(pairs, srcCol, dstCol)
+    if (m > twoPhaseEdges)
       ("two-phase", runTwoPhase(edges0, "a", "b"))
     else {
-      val (labels, converged) = hashMin(edges0, hashMinRounds)
+      val (labels, converged) = hashMin(edges0, m, hashMinRounds)
       if (converged) ("hash-min", labels)
       else ("two-phase", runTwoPhase(edges0, "a", "b"))
     }
   }
 
-  /** Edge frame in canonical (a, b) long columns, materialized once:
-    * unions/iterations reference it many times — an expensive upstream
-    * plan (e.g. a similarity join) must not re-run per reference.
+  /** Edge frame in canonical (a, b) long columns, materialized once,
+    * and its edge count (observed by the same job): unions/iterations
+    * reference it many times — an expensive upstream plan (e.g. a
+    * similarity join) must not re-run per reference.
     */
-  private def canonEdges(pairs: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    pairs
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .localCheckpoint()
+  private def canonEdges(pairs: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, Long) = {
+    val (edges, r) = FixedPoint.checkpointObserved(pairs
+      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b")),
+      count(lit(1)).as("m"))
+    (edges, r.getLong(0))
+  }
 
-  /** Hash-min propagation loop; returns (labels, converged). */
-  private def hashMin(edges0: DataFrame, maxIter: Int): (DataFrame, Boolean) = {
-    // size the iteration width to the graph, not the session default:
-    // dedup graphs are usually tiny relative to the corpus, and paying
-    // 32 shuffle tasks per round for a few hundred edges makes each
-    // round scheduling-bound. ~500k edges per partition, capped at the
-    // session parallelism.
-    val spark = edges0.sparkSession
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (edges0.count() / 500000L).toInt + 1))
+  /** Hash-min propagation loop over `m` canonical edges; returns
+    * (labels, converged).
+    */
+  private def hashMin(edges0: DataFrame, m: Long,
+      maxIter: Int): (DataFrame, Boolean) = {
+    // dedup graphs are usually tiny relative to the corpus: ~500k
+    // edges per partition ([[FixedPoint.width]])
+    val parts = FixedPoint.width(edges0.sparkSession, m, 500000L)
     val edges = edges0.repartition(parts)
     val undirected = edges.unionByName(
       edges.select(col("b").as("a"), col("a").as("b"))).distinct()
@@ -84,42 +92,22 @@ object ConnectedComponents {
 
     // Convergence check: labels are monotone non-increasing under
     // hash-min propagation, so the label sum strictly decreases until
-    // the fixpoint. The sum rides as an observe() metric INSIDE each
-    // round's checkpoint job (guide §1.2: one job per round carries
-    // both the rows and the convergence scalar) instead of a separate
-    // aggregate job over the checkpointed frame — job count per round
-    // halves, values unchanged (the decimal sum is exact and
-    // order-independent; a long sum could overflow under ANSI on
-    // billions of large ids).
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val name = s"graft_cc_sum_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = df.observe(name,
-        sum(col("component").cast("decimal(38,0)")).as("label_sum"))
-      val ck = observed.localCheckpoint()
-      (ck, observed.queryExecution.observedMetrics(name).getDecimal(0))
-    }
-
-    var (labels, prevSum) = checkpointWithSum(
+    // the fixpoint (a decimal sum: exact and order-independent; a long
+    // sum could overflow under ANSI on billions of large ids).
+    FixedPoint.untilStable(
       undirected.select(col("a").as("vertex")).distinct()
         .withColumn("component", col("vertex"))
-        .repartition(parts, col("vertex")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      iter += 1
-      // neighbor labels: for each edge a->b, b's current label
-      val neighborLabels = undirected
-        .join(labels.withColumnRenamed("vertex", "b"), "b")
-        .select(col("a").as("vertex"), col("component"))
-      val (ck, s) = checkpointWithSum(
+        .repartition(parts, col("vertex")),
+      maxIter, sum(col("component").cast("decimal(38,0)")).as("label_sum")) {
+      labels =>
+        // neighbor labels: for each edge a->b, b's current label
+        val neighborLabels = undirected
+          .join(labels.withColumnRenamed("vertex", "b"), "b")
+          .select(col("a").as("vertex"), col("component"))
         labels.unionByName(neighborLabels)
           .groupBy("vertex")
-          .agg(min(col("component")).as("component")))
-      labels = ck
-      converged = s == prevSum
-      prevSum = s
+          .agg(min(col("component")).as("component"))
     }
-    (labels, converged)
   }
 
   /** Alternating large-star/small-star connected components (Kiveris et
@@ -163,32 +151,15 @@ object ConnectedComponents {
         .unionByName(linked.select(col("u"), col("m").as("v"))))
     }
 
-    // stable signature of the canonical (distinct) edge set: XOR of
-    // per-edge hashes — order-insensitive and overflow-free under
-    // ANSI. Folded into each round's checkpoint job as observe()
-    // metrics (the hashMin recipe): one job per star round instead of
-    // checkpoint + separate aggregate.
-    def checkpointWithSig(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val name = s"graft_cc2_sig_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = e.observe(name,
-        count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h"))
-      val ck = observed.localCheckpoint()
-      val r = observed.queryExecution.observedMetrics(name)
-      (ck, (r.getLong(0), r.getLong(1)))
-    }
-
-    var (edges, sig) = checkpointWithSig(canon(pairs
+    // stable signature of the canonical (distinct) edge set: its count
+    // and the XOR of per-edge hashes — order-insensitive and
+    // overflow-free under ANSI
+    val (edges, _) = FixedPoint.untilStable(canon(pairs
       .select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      iter += 1
-      val (ck, s) = checkpointWithSig(smallStar(largeStar(edges)))
-      edges = ck
-      converged = s == sig
-      sig = s
+        col(dstCol).cast("long").as("v"))), maxIter,
+      count(lit(1)).as("n"),
+      coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h")) {
+      e => smallStar(largeStar(e))
     }
     // stars: non-roots point at their component root; roots appear only
     // as targets, so they self-map through the v side

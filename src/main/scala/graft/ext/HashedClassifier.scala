@@ -203,11 +203,13 @@ object HashedClassifier {
           while (i <= dim) { a(i) += b(i); i += 1 }
           a
         }
+        // one physical plan for the probe and the collect (see
+        // CentroidAssign.cellMeans)
         val rdd = perPartition.rdd
         val g: Array[Double] =
           if (rdd.getNumPartitions <= 512) {
             val acc = new Array[Double](dim + 1)
-            perPartition.collect().foreach(p => mergeInto(acc, p))
+            rdd.collect().foreach(p => mergeInto(acc, p))
             acc
           } else rdd.treeReduce(mergeInto _, depth = 2)
         present.foreach(f => step(f, g(f) / n + l2 * w(f)))

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.FixedPoint
+
 /** Fixed-iteration HITS (Kleinberg 1999) in PURE INTEGER ARITHMETIC —
   * the hub/authority companion to [[PageRank]]: authority = "pointed
   * at by good hubs", hub = "points at good authorities", the classic
@@ -21,11 +23,11 @@ import org.apache.spark.sql.functions._
   * round — bounded, deterministic, mirrored exactly in the oracle.
   *
   * Scale shape: per round, one hash shuffle keyed on src (hub pull)
-  * and one on dst (authority pull); the L1 total is a single-row
-  * aggregate broadcast back via crossJoin (the [[TfIdf]] scalar
-  * pattern — no driver collect); each round's pull is
-  * `localCheckpoint`ed because it feeds two consumers (total + next
-  * pull) — per-round materialization, not PageRank's every-k cadence,
+  * and one on dst (authority pull); the L1 total is an observed metric
+  * of the pull's checkpoint job ([[graft.core.FixedPoint]]); each
+  * round's pull is `localCheckpoint`ed because it feeds two consumers
+  * (total + next pull) — per-round materialization, not PageRank's
+  * every-k cadence,
   * is what keeps the plan linear in `iters`. Edge-less nodes stay out
   * of the iteration entirely (their score is identically 0) and are
   * zero-filled by one census join at the output.
@@ -33,14 +35,6 @@ import org.apache.spark.sql.functions._
 object Hits {
 
   val Scale = 1000000000000L // 10^12 fixed-point
-
-  /** Node-count bound for broadcasting a per-round score frame
-    * ((node, score_e12) rows, ~24 B each ⇒ ~25 MB at the bound)
-    * instead of checkpointing it — the operator KNOWS |nodes| exactly,
-    * so the broadcast-vs-materialize choice is a driver scalar, not a
-    * planner estimate. Scale-adaptive: big graphs keep the checkpoint.
-    */
-  val BroadcastableNodes = 1000000L
 
   /** (node, hub_e12, auth_e12) after `iters` full rounds (authority
     * update then hub update) over `edges(srcCol, dstCol)`. Node set =
@@ -53,37 +47,20 @@ object Hits {
       dstCol: String,
       iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).cache()
-    val nodes0 = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-    val n = nodes0.count() // eager, one driver scalar
-    // graph-sized width for the node cache (the [[PageRank]] /
-    // [[ConnectedComponents]] parts rule): otherwise every stage over
-    // it pays spark.sql.shuffle.partitions tasks on a tiny frame
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
-    val nodes = nodes0.coalesce(parts).cache()
+    val g = FixedPoint.graph(edges, srcCol, dstCol)
 
     // x·10¹² DIV Σx in exact integer arithmetic. The L1 total is an
-    // observe() metric folded INTO the pull's checkpoint job (guide
-    // §1.2: one materialization job carries both the rows and the
-    // scalar), replacing the broadcast-agg crossJoin that cost one
-    // extra broadcast-build job per half-round. The metric is an exact
-    // decimal sum (order-independent), read synchronously off the
-    // executed plan; the division then rides as a literal with the
-    // same DECIMAL(38,0) DIV semantics, so scores are bit-identical.
+    // exact decimal sum observed by the pull's checkpoint job; the
+    // division then rides as a literal with DECIMAL(38,0) DIV
+    // semantics.
     // Nodes with no in-/out-edges stay ABSENT here (their score is
     // exactly 0: they contribute nothing to the opposite pull), so the
     // per-round nodes join is deferred to the single zero-fill at the
     // output — two fewer shuffles per round.
     def l1Normalize(rawLazy: DataFrame, valCol: String): DataFrame = {
-      val name = s"graft_hits_l1_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = rawLazy.observe(name,
+      val (raw, m) = FixedPoint.checkpointObserved(rawLazy,
         sum(col(valCol).cast("decimal(38,0)")).as("l1_total"))
-      val raw = observed.localCheckpoint()
-      val tot = observed.queryExecution.observedMetrics(name).getDecimal(0)
+      val tot = m.getDecimal(0)
       // empty pull (no edges): the projection below never evaluates, so
       // any non-null divisor literal keeps the expression well-formed
       val totLit = if (tot == null) "1" else tot.toBigInteger.toString
@@ -92,12 +69,12 @@ object Hits {
           s"DIV CAST('$totLit' AS DECIMAL(38,0)) AS BIGINT)").as(valCol))
     }
 
-    var hub = nodes.withColumn("hub_e12", lit(Scale / math.max(n, 1L)))
+    var hub = g.nodes.withColumn("hub_e12", lit(Scale / math.max(g.n, 1L)))
     var auth: DataFrame = null
     for (i <- 1 to iters) {
       // sums ride DECIMAL so a hub-heavy node set can never wrap an
       // int64 (DuckDB's SUM widens to int128 — mirror it exactly)
-      val araw = e
+      val araw = g.edges
         .join(hub.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("hub_e12").cast("decimal(38,0)")).as("auth_e12"))
@@ -114,25 +91,22 @@ object Hits {
       // plan lost the estimate). Above the bound the checkpoint
       // returns. Values are unaffected either way: integer arithmetic,
       // spec-pinned partition invariance.
-      def scoreFrame(norm: DataFrame): DataFrame =
-        if (n <= BroadcastableNodes) broadcast(norm)
-        else norm.localCheckpoint()
-      auth = scoreFrame(l1Normalize(araw, "auth_e12"))
-      val hraw = e
+      auth = g.small(l1Normalize(araw, "auth_e12"), _.localCheckpoint())
+      val hraw = g.edges
         .join(auth.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"))
         .agg(sum(col("auth_e12").cast("decimal(38,0)")).as("hub_e12"))
-      hub = scoreFrame(l1Normalize(hraw, "hub_e12"))
+      hub = g.small(l1Normalize(hraw, "hub_e12"), _.localCheckpoint())
     }
     // one zero-fill join against the node census at the very end
-    val out = nodes
+    val out = g.nodes
       .join(hub, Seq("node"), "left")
       .join(auth, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub_e12"), lit(0L)).as("hub_e12"),
         coalesce(col("auth_e12"), lit(0L)).as("auth_e12"))
       .localCheckpoint()
-    e.unpersist(); nodes.unpersist()
+    g.unpersist()
     out
   }
 }

@@ -22,9 +22,8 @@ import org.apache.spark.sql.functions._
   * when callers need proof.
   *
   * Scale shape: per round, one degree hash-agg and two left-semi joins
-  * keyed on the vertex — no driver state, lineage cut per round (the
-  * iterative-operator recipe shared with [[ConnectedComponents]],
-  * [[PageRank]], [[ShortestPaths]]).
+  * keyed on the vertex — no per-round scalar, lineage cut per round by a
+  * lazy checkpoint ([[graft.core.FixedPoint]]).
   */
 object KCore {
 

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.FixedPoint
+
 /** Fixed-iteration synchronous label propagation (Raghavan et al.
   * 2007) — community detection for the link-graph tier: after a few
   * rounds, densely connected vertex groups converge onto one label,
@@ -21,8 +23,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: per round one (node,label) count aggregate and one
   * node-keyed window for the argmax — both plain hash exchanges on
   * frames bounded by the neighbor-label multiset; labels are
-  * `localCheckpoint`ed per round (flat lineage, [[ConnectedComponents]]
-  * recipe). Edges are taken as DIRECTED adjacency: pass a symmetrized
+  * `localCheckpoint`ed per round (flat lineage, [[graft.core.FixedPoint]]).
+  * Edges are taken as DIRECTED adjacency: pass a symmetrized
   * frame for undirected semantics (the q169 gate does).
   */
 object LabelPropagation {
@@ -38,19 +40,8 @@ object LabelPropagation {
       dstCol: String,
       iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).cache()
-    val nodes0 = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-    // graph-sized width for the node cache (the [[PageRank]] parts
-    // rule); the count doubles as the cache materialization
-    val n = nodes0.count()
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
-    val nodes = nodes0.coalesce(parts).cache()
-
-    var labels = nodes.withColumn("label", col("node"))
+    val g = FixedPoint.graph(edges, srcCol, dstCol)
+    var labels = g.nodes.withColumn("label", col("node"))
     for (i <- 1 to iters) {
       // argmax(count, ties smallest label) as ONE hash aggregate:
       // max(struct(c, ~label)) picks the largest count and, among
@@ -61,13 +52,10 @@ object LabelPropagation {
       // sort of the neighbor-label multiset; the second aggregate is
       // map-side partial and node-keyed (guide §2.3/§2.4).
       // LabelPropagationSpec pins equality against the window form.
-      // the label frame has EXACTLY n rows (a driver scalar), so the
-      // broadcast-vs-shuffle choice for the per-round joins needs no
-      // planner estimate (the [[Hits.BroadcastableNodes]] rationale)
-      def small(df: DataFrame): DataFrame =
-        if (n <= Hits.BroadcastableNodes) broadcast(df) else df
-      val picked = e
-        .join(small(labels).withColumnRenamed("node", "dst"), "dst")
+      // The label frame has EXACTLY n rows, so the per-round joins
+      // broadcast it by the kernel's node-count bound.
+      val picked = g.edges
+        .join(g.small(labels).withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
@@ -78,14 +66,14 @@ object LabelPropagation {
       // not grow — and the blocks still materialize exactly once,
       // inside the consuming job); only the final round is eager so
       // the result is materialized before the caches are dropped.
-      labels = nodes
-        .join(small(picked).withColumnRenamed("label", "new_label"),
+      labels = g.nodes
+        .join(g.small(picked).withColumnRenamed("label", "new_label"),
           Seq("node"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("node")).as("label"))
         .localCheckpoint(eager = i == iters)
     }
-    e.unpersist(); nodes.unpersist()
+    g.unpersist()
     labels
   }
 }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.FixedPoint
+
 /** Fixed-iteration PageRank in PURE INTEGER ARITHMETIC — the
   * link-authority score (Page et al. 1999) used by web-corpus
   * pipelines to weight domains/pages when sampling training data.
@@ -28,73 +30,38 @@ import org.apache.spark.sql.functions._
   * Scale shape: per iteration, ONE shuffle keyed on src for the
   * (edges ⋈ ranks ⋈ outdeg) contribution join and one agg shuffle on
   * dst; outdeg is computed once and reused; ranks are
-  * `localCheckpoint`ed per round so lineage stays flat over any
-  * iteration count (the [[ConnectedComponents]] recipe). Driver state
-  * is one scalar (N).
+  * `localCheckpoint`ed every few rounds so lineage stays flat over any
+  * iteration count, and the node frame caches at graph-sized width
+  * ([[graft.core.FixedPoint]]). Collected state is one scalar (N).
   */
 object PageRank {
 
   val Scale = 1000000000000L // 10^12 fixed-point
 
+  /** Rounds between lineage cuts: the rounds in between stay LAZY (one
+    * fused multi-round plan — cheaper than materializing every round),
+    * and every k-th round cuts the tree so planning time stays flat at
+    * high iteration counts. The arithmetic is integer, so the cadence
+    * cannot change a single output bit (spec-pinned).
+    */
+  private val CheckpointEvery = 5
+
   /** (node, rank_e12) after `iters` rounds over `edges(srcCol, dstCol)`.
     * Node set = every id appearing as src or dst.
-    *
-    * `checkpointEvery` bounds lineage depth: rounds in between stay
-    * LAZY (one fused multi-round plan — cheaper than materializing
-    * every round), and every k-th round cuts the tree so planning time
-    * stays flat at high iteration counts. The cadence cannot change a
-    * single output bit — the arithmetic is integer — so it is purely a
-    * lineage/planning dial (spec-pinned).
     */
   def run(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iters: Int,
-      dampingPct: Int = 85,
-      checkpointEvery: Int = 5): DataFrame = {
+      dampingPct: Int = 85): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).cache()
-    val nodes0 = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-    val n = nodes0.count() // eager, one driver scalar
-    // graph-sized iteration width (the ConnectedComponents parts rule):
-    // the node frame caches at spark.sql.shuffle.partitions otherwise,
-    // and every per-round stage over it pays that task count even when
-    // the graph is tiny — coalesce (no shuffle) to ~2M nodes/partition,
-    // capped at the session parallelism; values are partition-invariant
-    // integer arithmetic, so this is purely a scheduling dial.
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
-    val nodes = nodes0.coalesce(parts).cache()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .coalesce(parts).cache()
-    val base = (Scale / 100L) * (100L - dampingPct) / math.max(n, 1L)
-
-    var ranks = nodes
-      .withColumn("rank_e12", lit(Scale / math.max(n, 1L)))
-    for (i <- 1 to iters) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .join(outdeg, "src")
-        .select(col("dst").as("node"),
-          expr("rank_e12 DIV outdeg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) +
-            expr(s"($dampingPct * coalesce(in_sum, 0)) DIV 100"))
-            .as("rank_e12"))
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    // final materialization before dropping the caches it depends on
-    ranks = ranks.localCheckpoint()
-    e.unpersist(); nodes.unpersist(); outdeg.unpersist()
-    ranks
+    val g = FixedPoint.graph(edges, srcCol, dstCol)
+    // every node is a seed with teleport weight 1: the [[personalized]]
+    // recurrence over |S| = N is exactly the uniform one
+    iterate(g, g.nodes.withColumn("teleport", lit(1L)), math.max(g.n, 1L),
+      iters, dampingPct)
   }
 
   /** Personalized PageRank (TrustRank, Gyöngyi et al. 2004): identical
@@ -114,52 +81,51 @@ object PageRank {
       dstCol: String,
       seeds: DataFrame,
       iters: Int,
-      dampingPct: Int = 85,
-      checkpointEvery: Int = 5): DataFrame = {
+      dampingPct: Int = 85): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).cache()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
     val sd = seeds.select(col(seeds.columns.head).as("node")).distinct()
-    val flagged0 = nodes
-      .join(sd.withColumn("is_seed", lit(1L)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-    // one scalar job yields both counts; the node frame then caches at
-    // graph-sized width (see run()'s parts rationale)
-    val cnts = flagged0
-      .agg(count(lit(1)).as("n"), sum(col("is_seed")).as("s")).head()
-    val n = cnts.getLong(0)
-    val nSeeds = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
+    // the node count and the seed count come from one scalar job
+    val g = FixedPoint.graph(edges, srcCol, dstCol,
+      nodes => nodes
+        .join(sd.withColumn("is_seed", lit(1L)), Seq("node"), "left")
+        .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("teleport")),
+      Seq(sum(col("teleport"))))
+    val nSeeds = if (g.census.isNullAt(1)) 0L else g.census.getLong(1)
+    if (nSeeds == 0) g.unpersist()
     require(nSeeds > 0, "no seed intersects the graph's node set")
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
-    val flagged = flagged0.coalesce(parts).cache()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .coalesce(parts).cache()
-    val base = (Scale / 100L) * (100L - dampingPct) / nSeeds
+    iterate(g, g.nodes, nSeeds, iters, dampingPct)
+  }
 
-    var ranks = flagged
-      .select(col("node"), (col("is_seed") * lit(Scale / nSeeds)).as("rank_e12"))
+  /** The rank recurrence over `teleports(node, teleport)`: the teleport
+    * mass `10¹²` is spread over `nSeeds` and lands on each node times
+    * its teleport weight, initially and as every round's base term.
+    * Drops the graph's caches once the result is materialized.
+    */
+  private def iterate(g: FixedPoint.Graph, teleports: DataFrame,
+      nSeeds: Long, iters: Int, dampingPct: Int): DataFrame = {
+    val outdeg = g.edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      .coalesce(g.parts).cache()
+    val base = (Scale / 100L) * (100L - dampingPct) / nSeeds
+    var ranks = teleports
+      .select(col("node"), (col("teleport") * lit(Scale / nSeeds)).as("rank_e12"))
     for (i <- 1 to iters) {
-      val contribs = e
+      val contribs = g.edges
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .join(outdeg, "src")
         .select(col("dst").as("node"),
           expr("rank_e12 DIV outdeg").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
-      ranks = flagged.join(contribs, Seq("node"), "left")
+      ranks = teleports.join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (col("is_seed") * lit(base) +
+          (col("teleport") * lit(base) +
             expr(s"($dampingPct * coalesce(in_sum, 0)) DIV 100"))
             .as("rank_e12"))
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
+      if (i % CheckpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
+    // final materialization before dropping the caches it depends on
     ranks = ranks.localCheckpoint()
-    e.unpersist(); flagged.unpersist(); outdeg.unpersist()
+    g.unpersist(); outdeg.unpersist()
     ranks
   }
 }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.FixedPoint
+
 /** Multi-source BFS hop levels — the fourth graph primitive next to
   * [[ConnectedComponents]] (reachability), [[PageRank]] (authority)
   * and [[Triangles]] (transitivity): distance-from-seed-set, the
@@ -21,9 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per round, one equi-join keyed on the node id and one
   * left-anti join against the visited set; `localCheckpoint` flattens
-  * lineage each round (the [[ConnectedComponents]]/[[PageRank]]
-  * recipe) so plans stay constant-size over any hop count. Driver
-  * state: one boolean (frontier emptiness) per round.
+  * lineage each round ([[graft.core.FixedPoint]]) so plans stay
+  * constant-size over any hop count. Collected state: one row count
+  * (frontier emptiness) per round, observed by the checkpoint job.
   */
 object ShortestPaths {
 
@@ -39,30 +41,29 @@ object ShortestPaths {
     val und = e.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(eager = false)
-    var visited = seeds.select(seeds.columns.head match {
-        case c => col(c).as("v")
-      }).distinct().withColumn("level", lit(0))
-      .localCheckpoint(eager = true)
+    // every checkpoint (the seeds', then one frontier per round)
+    // carries its own row count as an observed metric, so each round
+    // is ONE job; the visited set is a LAZY union of the checkpointed
+    // frontiers (each a flat LogicalRDD leaf, so the anti-join plan
+    // stays maxHops-bounded) instead of re-copying all visited rows
+    // into a third checkpoint every round.
+    def levelled(df: DataFrame): (DataFrame, Boolean) = {
+      val (ck, r) = FixedPoint.checkpointObserved(df, count(lit(1)).as("n"))
+      (ck, r.getLong(0) > 0)
+    }
+    var (visited, frontierNonEmpty) = levelled(
+      seeds.select(col(seeds.columns.head).as("v")).distinct()
+        .withColumn("level", lit(0)))
     var frontier = visited
-    var frontierNonEmpty = !frontier.isEmpty
     var hop = 0
-    // per round ONE job: the frontier checkpoint carries its own row
-    // count as an observe() metric (replacing the separate isEmpty
-    // job), and the visited set is a LAZY union of the per-round
-    // checkpointed frontiers (each a flat LogicalRDD leaf, so the
-    // anti-join plan stays maxHops-bounded) instead of re-copying all
-    // visited rows into a third checkpoint every round.
     while (hop < maxHops && frontierNonEmpty) {
       hop += 1
-      val name = s"graft_bfs_n_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = frontier.join(und, frontier("v") === und("src"))
-        .select(und("dst").as("v")).distinct()
-        .join(visited, Seq("v"), "left_anti")
-        .withColumn("level", lit(hop))
-        .observe(name, count(lit(1)).as("n"))
-      val next = observed.localCheckpoint(eager = true)
-      frontierNonEmpty =
-        observed.queryExecution.observedMetrics(name).getLong(0) > 0
+      val (next, nonEmpty) = levelled(
+        frontier.join(und, frontier("v") === und("src"))
+          .select(und("dst").as("v")).distinct()
+          .join(visited, Seq("v"), "left_anti")
+          .withColumn("level", lit(hop)))
+      frontierNonEmpty = nonEmpty
       visited = visited.unionByName(next)
       frontier = next
     }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.FixedPoint
+
 /** Distributed WordPiece tokenizer (Schuster & Nakajima 2012, the
   * BERT tokenizer family) — the third subword family next to
   * [[Bpe]] (merge-order application) and [[UnigramLm]] (Viterbi):
@@ -75,20 +77,8 @@ object WordPiece {
     * Bpe.foldMerges]] with the WordPiece join; merges ride as ONE
     * typed literal (shape-constant generated code).
     */
-  def foldMerges(syms: Column, merges: Seq[(String, String)]): Column = {
-    if (merges.isEmpty) return syms
-    val packed = merges.map { case (l, r) => (l, r, joined(l, r)) }
-    aggregate(
-      typedLit(packed).cast("array<struct<l:string,r:string,j:string>>"),
-      syms,
-      (acc, m) => aggregate(acc, array().cast("array<string>"),
-        (out, s) => when(
-          size(out) > 0 && element_at(out, -1) === m.getField("l") &&
-            s === m.getField("r"),
-          concat(slice(out, lit(1), size(out) - 1),
-            array(m.getField("j"))))
-          .otherwise(concat(out, array(s)))))
-  }
+  def foldMerges(syms: Column, merges: Seq[(String, String)]): Column =
+    Bpe.foldJoined(syms, merges.map { case (l, r) => (l, r, joined(l, r)) })
 
   /** Test hook mirroring [[Bpe.lastTrainRounds]]. */
   @volatile private[ext] var lastTrainRounds: Int = 0
@@ -107,39 +97,17 @@ object WordPiece {
     */
   def trainFromWords(words: DataFrame, nMerges: Int,
       batchMerges: Int = 1): Model = {
-    require(nMerges >= 0)
-    require(batchMerges >= 1, "batchMerges must be >= 1")
-    // LAZY checkpoints (the [[Bpe.trainFromWords]] recipe): each
-    // round's collect materializes the symbol table inside its own
-    // job, and the final fold (consumed by nobody) never runs. The
-    // alphabet census reads the checkpointed syms frame itself — same
-    // rows, and its collect is what materializes the initial table.
-    var syms = initialSymbols(words).localCheckpoint(eager = false)
+    // LAZY checkpoints ([[FixedPoint.trainMerges]]): the first
+    // round's collect materializes the initial symbol table, and the
+    // alphabet census afterwards reads those blocks (with no round, its
+    // own collect is what materializes them)
+    val syms = initialSymbols(words).localCheckpoint(eager = false)
+    val (ms, rounds) = FixedPoint.trainMerges(syms, nMerges, batchMerges,
+      "score")(pairScores, foldMerges)
+    lastTrainRounds = rounds
     val alphabet = syms
       .select(explode(col("syms")).as("sym"))
       .distinct().collect().map(_.getString(0)).toSet
-    val merges = Seq.newBuilder[(String, String)]
-    var done = false
-    var count = 0
-    var rounds = 0
-    while (count < nMerges && !done) {
-      val want = math.min(batchMerges, nMerges - count)
-      val top = pairScores(syms)
-        .orderBy(col("score").desc, col("left"), col("right"))
-        .limit(want * 4 + 8).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
-      val picked = Bpe.pickDisjoint(top, want)
-      if (picked.isEmpty) done = true
-      else {
-        merges ++= picked
-        count += picked.size
-        syms = syms.withColumn("syms",
-          foldMerges(col("syms"), picked)).localCheckpoint(eager = false)
-      }
-      rounds += 1
-    }
-    lastTrainRounds = rounds
-    val ms = merges.result()
     Model(ms, alphabet ++ ms.map { case (l, r) => joined(l, r) })
   }
 

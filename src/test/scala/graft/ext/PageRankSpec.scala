@@ -58,16 +58,22 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("checkpoint cadence never changes a bit") {
+    // 12 rounds cross the lineage cut twice (after rounds 5 and 10);
+    // the result must equal a plain integer replay of the recurrence
     val edges = for { a <- 1L to 25L; b <- Seq((a % 25) + 1, (a * 3 % 25) + 1) }
       yield a -> b
-    val df = edges.toDF("src", "dst")
-    val every1 = PageRank.run(df, "src", "dst", 7, checkpointEvery = 1)
-      .as[(Long, Long)].collect().toMap
-    val every3 = PageRank.run(df, "src", "dst", 7, checkpointEvery = 3)
-      .as[(Long, Long)].collect().toMap
-    val never = PageRank.run(df, "src", "dst", 7, checkpointEvery = 100)
-      .as[(Long, Long)].collect().toMap
-    assert(every1 == every3 && every3 == never)
+    val got = run(edges, 12)
+    val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val n = nodes.size.toLong
+    val outdeg = edges.groupBy(_._1).map { case (u, es) => u -> es.size.toLong }
+    val base = (S / 100L) * 15L / n
+    var ranks = nodes.map(_ -> S / n).toMap
+    for (_ <- 1 to 12) {
+      val inSum = edges.groupBy(_._2).map { case (v, es) =>
+        v -> es.map { case (u, _) => ranks(u) / outdeg(u) }.sum }
+      ranks = nodes.map(v => v -> (base + 85L * inSum.getOrElse(v, 0L) / 100L)).toMap
+    }
+    assert(got == ranks)
   }
 
   test("personalized: teleport lands only on seeds; trust decays with distance") {
